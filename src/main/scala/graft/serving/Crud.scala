@@ -53,6 +53,17 @@ final class CrudTable(spark: SparkSession, schema: StructType, pks: Seq[String])
     ref.set(Warehouse.upsert(current, oneRow(values), pks).localCheckpoint())
   }
 
+  /** Replace an existing row by `merge` of its current JSON record; false
+    * if the key was absent (the route's 404). The read and the write hold
+    * the table's write lock, so no concurrent write lands between them.
+    */
+  def update(keyVals: Seq[Any])(merge: String => Seq[Any]): Boolean = synchronized {
+    get(keyVals) match {
+      case None => false
+      case Some(existing) => put(merge(existing)); true
+    }
+  }
+
   /** Delete by PK; false if the key was absent (the route's 404). */
   def delete(keyVals: Seq[Any]): Boolean = synchronized {
     if (!exists(keyVals)) false

@@ -306,6 +306,34 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     assert(even == Map(1L -> 1L, 2L -> 2L))
   }
 
+  test("LPA on asymmetric edge lists matches the fixed-round unroll") {
+    // Directed edges shift the node set between rounds: round 0 labels the
+    // sources, later rounds only the destinations reached. In 2→1, node 2
+    // leaves after round 1 and node 1 enters, so rounds 0 and 1 share no
+    // node; an intersection-only fixpoint probe would call round 1 fixed,
+    // while round 2 is already empty. The second graph keeps a non-empty
+    // state to the end. The oracle is the same rounds unrolled in plain Scala.
+    def unrolled(edges: Seq[(Long, Long)], rounds: Int): Map[Long, Long] = {
+      var labels = edges.map { case (src, _) => src -> src }.toMap
+      for (_ <- 1 to rounds) {
+        labels = edges
+          .flatMap { case (src, dst) => labels.get(src).map(dst -> _) }
+          .groupBy(_._1).view
+          .mapValues(_.groupBy(_._2).view.mapValues(_.size).toSeq
+            .minBy { case (lbl, cnt) => (-cnt, lbl) }._1)
+          .toMap
+      }
+      labels
+    }
+    import spark.implicits._
+    for (edges <- Seq(Seq((2L, 1L)),
+        Seq((1L, 2L), (1L, 6L), (2L, 3L), (2L, 6L), (3L, 4L), (5L, 3L), (6L, 5L)))) {
+      val got = Graph.labelPropagation(edges.toDF("src", "dst").repartition(4))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == unrolled(edges, Graph.LpaRounds), s"edges $edges")
+    }
+  }
+
   test("LPA is independent of partitioning") {
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L),
       (5L, 6L), (3L, 4L), (6L, 7L), (7L, 8L))

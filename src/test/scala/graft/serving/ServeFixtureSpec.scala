@@ -1,0 +1,219 @@
+package graft.serving
+
+import java.io.{BufferedReader, InputStreamReader}
+import java.net.{HttpURLConnection, Socket, URI}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path}
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, Executors, TimeUnit}
+
+import scala.io.Source
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
+import graft.etl.EtlJob
+
+/** Serving over a tiny WHO-shaped CSV trio written here, so it runs without
+  * the reference checkout. The trio carries the FIXTURES.md §A cases the
+  * routes touch: a blank `WHO_region`, null `New_cases`/`New_deaths`,
+  * scientific-notation `TOTAL_VACCINATIONS`, empty and comma-joined
+  * `VACCINES_USED`, padded upper-case vaccination country names, and one
+  * vaccination snapshot row per country.
+  *
+  * Pins the serving topology: `Serve.start` materializes the star once, so
+  * every read route keeps answering, byte for byte, after the CSVs are
+  * deleted; and requests run on a dispatcher pool, so a client slow to send
+  * its body does not hold up the others and concurrent clients each read
+  * their own writes.
+  */
+class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
+
+  private val codes = Seq(
+    ("FR", "France", "EURO"), ("DE", "Germany", "EURO"), ("BR", "Brazil", "AMRO"),
+    ("XA", "Atlantis", ""), ("ZB", "Otherland", "OTHER"))
+  private val weeks = 12
+
+  /** New_cases of country `c` in week `w`; None is a blank (null) cell. */
+  private def cases(c: Int, w: Int): Option[Int] =
+    if ((c + w) % 4 == 0) None else Some(100 * (c + 1) + 7 * w)
+  private def deaths(c: Int, w: Int): Option[Int] =
+    if ((c + w) % 5 == 0) None else Some(c + w)
+
+  private lazy val dataDir: Path = {
+    val dir = Files.createTempDirectory("serve-fixture")
+    def write(name: String, lines: Seq[String]): Unit =
+      Files.write(dir.resolve(name), lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    val first = java.time.LocalDate.parse("2023-01-01") // a Sunday, like the WHO feed
+    write("WHO-COVID-19-global-data.csv",
+      "Date_reported,Country_code,Country,WHO_region,New_cases,Cumulative_cases,New_deaths,Cumulative_deaths" +:
+        (for { (cc, c) <- codes.zipWithIndex; w <- 0 until weeks } yield {
+          val (code, name, region) = cc
+          val cum = (0 to w).flatMap(cases(c, _)).sum
+          val cumD = (0 to w).flatMap(deaths(c, _)).sum
+          s"${first.plusDays(7L * w)},$code,$name,$region,${cases(c, w).getOrElse("")},$cum," +
+            s"${deaths(c, w).getOrElse("")},$cumD"
+        }))
+    write("vaccination-data.csv", Seq(
+      "COUNTRY,ISO3,WHO_REGION,DATA_SOURCE,DATE_UPDATED,TOTAL_VACCINATIONS," +
+        "PERSONS_VACCINATED_1PLUS_DOSE,TOTAL_VACCINATIONS_PER100," +
+        "PERSONS_VACCINATED_1PLUS_DOSE_PER100,PERSONS_LAST_DOSE,PERSONS_LAST_DOSE_PER100," +
+        "VACCINES_USED,FIRST_VACCINE_DATE,NUMBER_VACCINES_TYPES_USED," +
+        "PERSONS_BOOSTER_ADD_DOSE,PERSONS_BOOSTER_ADD_DOSE_PER100",
+      "France,FRA,EURO,REPORTING,2023-02-01,1.5E6,1000000,20.5,15.1,900000,13.2,,2021-01-01,2,,",
+      "  GERMANY ,DEU,EURO,REPORTING,2023-02-01,2.296475E7,20000000,80.1,70.2,19000000,60.3," +
+        "\"Alpha, Beta\",2021-01-02,2,,",
+      "Brazil,BRA,AMRO,REPORTING,2023-02-01,3.0E5,250000,1.5,1.2,200000,1.0,,2021-02-01,1,,"))
+    write("vaccination-metadata.csv", Seq(
+      "ISO3,PRODUCT_NAME,VACCINE_NAME,COMPANY_NAME,AUTHORIZATION_DATE,START_DATE,END_DATE,COMMENT,DATA_SOURCE",
+      "DEU,Alpha-1,Alpha,AlphaCo,2020-12-01,2020-12-20,,,REPORTING",
+      "DEU,Beta-1,Beta,BetaCo,2020-12-01,2020-12-20,,,REPORTING",
+      "FRA,Alpha-1,Alpha,AlphaCo,2020-12-01,2020-12-20,,,REPORTING"))
+    dir
+  }
+
+  private lazy val server = Serve.start(EtlJob.run(spark, dataDir.toString), port = 0)
+
+  override def afterAll(): Unit = {
+    try server.stop(0)
+    finally {
+      if (Files.exists(dataDir)) deleteTree(dataDir)
+      super.afterAll()
+    }
+  }
+
+  private def deleteTree(p: Path): Unit = {
+    val s = Files.walk(p)
+    try s.iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    finally s.close()
+  }
+
+  private def request(method: String, path: String, body: Option[String] = None): (Int, String) = {
+    val conn = URI.create(s"http://localhost:${server.getAddress.getPort}$path").toURL
+      .openConnection().asInstanceOf[HttpURLConnection]
+    conn.setRequestMethod(method)
+    conn.setReadTimeout(120000)
+    body.foreach { b =>
+      conn.setDoOutput(true)
+      conn.setRequestProperty("Content-Type", "application/json")
+      conn.getOutputStream.write(b.getBytes(StandardCharsets.UTF_8))
+    }
+    val code = conn.getResponseCode
+    val stream = if (code >= 400) conn.getErrorStream else conn.getInputStream
+    try (code, Source.fromInputStream(stream, "UTF-8").mkString)
+    finally conn.disconnect()
+  }
+
+  private def get(path: String): (Int, String) = request("GET", path)
+
+  /** Every read route group: plain-array, `{"data": …}`, paged, top-5,
+    * graph, `table/<name>`, forecast and RF routes.
+    */
+  private val readRoutes: Seq[String] = Seq(
+    "/api/total_cases", "/api/total_deaths", "/api/total_vaccines",
+    "/api/who_region", "/api/country", "/api/disease", "/api/vaccine",
+    "/api/daily_vaccine_statistics", "/api/weekly_statistics",
+    "/api/weekly_statistics_by_country?country_code=FR",
+    "/api/covid_cases_evolution", "/api/vaccinations_evolution",
+    "/api/worldmap/cases", "/api/worldmap/deaths", "/api/worldmap/vaccinated",
+    "/api/weekly_statistics_total?page=2&limit=5", "/api/top5_summary",
+    "/api/graph/country/cases?country=FR", "/api/graph/country/deaths?country=DE",
+    "/api/graph/country/vaccinated?country=DE",
+    "/api/predicted_weekly_statistics",
+    "/api/predict_cases?country=FR&start_date=2023-03-05&days=3",
+    "/api/metrics",
+  ) ++ Seq("who_region", "country", "disease", "vaccine", "weekly_statistics",
+    "daily_vaccine_statistics").map(t => s"/api/table/$t")
+
+  /** Each read route's body while the CSVs still exist. */
+  private lazy val recorded: Map[String, String] = readRoutes.map { r =>
+    val (code, body) = get(r)
+    assert(code == 200, s"$r: $body")
+    r -> body
+  }.toMap
+
+  test("a client slow to send its PUT body holds up neither other requests nor the table") {
+    assert(request("POST", "/country_statistics",
+      Some("""{"country":"SLOW","total_cases":1}"""))._1 == 201)
+    try {
+      val body = """{"total_cases":2}""".getBytes(StandardCharsets.UTF_8)
+      val sock = new Socket("localhost", server.getAddress.getPort)
+      try {
+        sock.setSoTimeout(120000)
+        val out = sock.getOutputStream
+        // headers now, body withheld: the handler blocks reading it
+        out.write(("PUT /country_statistics/SLOW HTTP/1.1\r\nHost: localhost\r\n" +
+          "Content-Type: application/json\r\nConnection: close\r\n" +
+          s"Content-Length: ${body.length}\r\n\r\n").getBytes(StandardCharsets.US_ASCII))
+        out.flush()
+        Thread.sleep(300)
+        // each of these times out if the withheld body holds the dispatcher
+        // or the table's write lock
+        assert(get("/health")._1 == 200)
+        assert(request("POST", "/country_statistics",
+          Some("""{"country":"FAST","total_cases":3}"""))._1 == 201)
+        out.write(body)
+        out.flush()
+        val status = new BufferedReader(new InputStreamReader(sock.getInputStream,
+          StandardCharsets.US_ASCII)).readLine()
+        assert(status.startsWith("HTTP/1.1 200"), status)
+        assert(get("/country_statistics/SLOW") ==
+          (200 -> """{"country":"SLOW","total_cases":2,"total_vaccinated":0}"""))
+      } finally sock.close()
+    } finally for (k <- Seq("SLOW", "FAST")) request("DELETE", s"/country_statistics/$k")
+  }
+
+  test("reads are served from the star materialized at start, not the CSVs") {
+    // generator totals, nulls filled to 0 (FIXTURES.md §A)
+    val totalCases = (for (c <- codes.indices; w <- 0 until weeks) yield cases(c, w).getOrElse(0)).sum
+    assert(recorded("/api/total_cases") == s"""[{"total_weekly_cases":$totalCases}]""")
+    // blank WHO_region → UNKNOWN code, displayed as "Other" like literal OTHER
+    assert(recorded("/api/who_region").contains(
+      """{"who_region_short_code":"UNKNOWN","who_region_name":"Other"}"""))
+    assert(recorded("/api/total_vaccines") ==
+      s"""[{"total_reported_shots":${1500000L + 2 * 22964750L + 300000L}}]""")
+
+    deleteTree(dataDir)
+    assert(!Files.exists(dataDir))
+    for (r <- readRoutes) assert(get(r) == (200 -> recorded(r)), r)
+  }
+
+  test("four concurrent clients: reads match and each client reads its own writes") {
+    val failures = new ConcurrentLinkedQueue[String]()
+    def expect(ok: Boolean, msg: => String): Unit = if (!ok) failures.add(msg)
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      val clients = (0 until 4).map { c =>
+        pool.submit(new Callable[Unit] {
+          def call(): Unit = for (round <- 0 until 2) {
+            for (r <- readRoutes.drop(c * 3) ++ readRoutes.take(c * 3)) {
+              val got = get(r)
+              expect(got == (200 -> recorded(r)), s"client $c $r: $got")
+            }
+            val key = s"C$c-$round"
+            val cases = 1000L * c + round
+            def row(n: Long) = s"""{"country":"$key","total_cases":$n,"total_vaccinated":0}"""
+            expect(request("POST", "/country_statistics",
+              Some(s"""{"country":"$key","total_cases":$cases}"""))._1 == 201, s"POST $key")
+            expect(get(s"/country_statistics/$key") == (200 -> row(cases)), s"GET $key after POST")
+            expect(request("PUT", s"/country_statistics/$key",
+              Some(s"""{"total_cases":${cases + 1}}"""))._1 == 200, s"PUT $key")
+            expect(get(s"/country_statistics/$key") == (200 -> row(cases + 1)), s"GET $key after PUT")
+            val region = s"""{"who_region":"R$c","year":${2020 + round},"total_cases":$cases,"total_deaths":1}"""
+            expect(request("POST", "/region_yearly_summary", Some(region))._1 == 201, s"POST R$c")
+            expect(get(s"/region_yearly_summary/R$c/${2020 + round}") == (200 -> region),
+              s"GET R$c after POST")
+            expect(request("DELETE", s"/country_statistics/$key")._1 == 200, s"DELETE $key")
+            expect(get(s"/country_statistics/$key")._1 == 404, s"GET $key after DELETE")
+          }
+        })
+      }
+      clients.foreach(_.get(300, TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+    assert(failures.isEmpty, failures.asScala.mkString("\n"))
+    // only the region rows survive: 4 clients × 2 rounds
+    assert(get("/country_statistics") == (200 -> "[]"))
+    assert(get("/region_yearly_summary")._2.split("\"who_region\"").length - 1 == 8)
+  }
+}
