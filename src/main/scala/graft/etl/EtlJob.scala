@@ -26,25 +26,33 @@ final case class StarSchema(
   )
 
   /** The same six tables computed once: each becomes an RDD-level
-    * `localCheckpoint`, so every later plan scans stored blocks instead of
-    * re-reading the CSVs and redoing the star's group-bys and joins (the
-    * reference's Postgres tables, app/etl.py:170-172, play this role).
-    * Local checkpoint blocks also survive `catalog.clearCache()`, which
-    * drops only SQL CacheManager entries.
-    *
-    * Each table is checkpointed through a FRESH projection, never the
-    * caller's Dataset itself: checkpointing a Dataset forces and keeps its
-    * `executedPlan`, which would pin that plan's broadcast relations
-    * (~17 MB each for `dailyVaccineStatistics`' broadcast joins), the
-    * Hadoop-conf broadcasts of its scans and its shuffle files for as long
-    * as the caller holds the lineage star.
+    * `localCheckpoint` ([[StarSchema.stored]]), so every later plan scans
+    * stored blocks instead of re-reading the CSVs and redoing the star's
+    * group-bys and joins (the reference's Postgres tables,
+    * app/etl.py:170-172, play this role).
     */
   def materialized: StarSchema = {
-    def stored(df: DataFrame): DataFrame =
-      df.select(df.columns.toIndexedSeq.map(col): _*).localCheckpoint()
+    import StarSchema.stored
     StarSchema(stored(whoRegion), stored(country), stored(disease), stored(vaccine),
       stored(weeklyStatistics), stored(dailyVaccineStatistics))
   }
+}
+
+object StarSchema {
+
+  /** `df` computed once, as an RDD-level `localCheckpoint`. Local checkpoint
+    * blocks survive `catalog.clearCache()`, which drops only SQL
+    * CacheManager entries.
+    *
+    * The checkpoint is taken through a FRESH projection, never `df` itself:
+    * checkpointing a Dataset forces and keeps its `executedPlan`, which
+    * would pin that plan's broadcast relations (~17 MB each for
+    * `dailyVaccineStatistics`' broadcast joins), the Hadoop-conf broadcasts
+    * of its scans and its shuffle files for as long as the caller holds
+    * `df`.
+    */
+  def stored(df: DataFrame): DataFrame =
+    df.select(df.columns.toIndexedSeq.map(col): _*).localCheckpoint()
 }
 
 /** Batch ETL: three WHO CSVs → 6-table star schema (SURVEY.md §2, §3.1).

@@ -158,11 +158,13 @@ object WhoStarQueries {
     * deliberately NOT the ETL's date_trunc week, so ISO week 1 can land in
     * the prior calendar year (SURVEY.md §2.8), reproduced in both engines.
     */
-  def wst07(s: SparkSession, dir: String): DataFrame =
-    ServingQueries.weeklyJoined(star(s))
+  def wst07(s: SparkSession, dir: String): DataFrame = {
+    val st = star(s)
+    ServingQueries.weeklyJoined(st, ServingQueries.weeklyVaccinations(st.dailyVaccineStatistics))
       .withColumn("date", date_format(col("date"), "yyyy-MM-dd"))
       .orderBy("country_short_code", "date", "country",
         "confirmed_cases", "deaths", "vaccinations")
+  }
 
   /** wst11 — Grafana panel 6 (W3 global yearly lag): incremental CFR from
     * year-over-year deltas of the global rollup (reference:

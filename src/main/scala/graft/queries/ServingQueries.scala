@@ -33,17 +33,69 @@ object ServingQueries {
       )
       .agg(sum(col("new_reported_shots")).as("total_weekly_vaccinations"))
 
+  /** The small fact aggregates the totals, worldmap, top5 and weekly routes
+    * read instead of the facts:
+    *  - `countryTotals`: per `country_short_code`, `total_cases` and
+    *    `total_deaths` summed over the weekly fact;
+    *  - `countryNameTotals`: the same per `country_name`, after the inner
+    *    join with the country dimension;
+    *  - `countryShots`: per `country_short_code`, `total_shots` summed over
+    *    the daily vaccine fact;
+    *  - `weeklyVaccinations`: the weekly routes' CTE, above.
+    *
+    * Every summed column is an integer type (`week_new_reported_*` int,
+    * `new_reported_shots` long), so a sum of these partial sums has the
+    * same value, type and nulls as the sum over the fact itself.
+    */
+  final case class FactAggregates(
+      countryTotals: DataFrame,
+      countryNameTotals: DataFrame,
+      countryShots: DataFrame,
+      weeklyVaccinations: DataFrame,
+  )
+
+  /** Defines the [[FactAggregates]] over `star`, passing each through `keep`
+    * as it is defined: the identity leaves them as lazy lineage;
+    * [[StarSchema.stored]] computes each once, and `countryNameTotals` is
+    * then derived from the stored `countryTotals`.
+    */
+  def factAggregates(star: StarSchema,
+      keep: DataFrame => DataFrame = identity): FactAggregates = {
+    val perCountry = keep(star.weeklyStatistics
+      .groupBy("country_short_code")
+      .agg(
+        sum("week_new_reported_cases").as("total_cases"),
+        sum("week_new_reported_deaths").as("total_deaths"),
+      ))
+    FactAggregates(
+      countryTotals = perCountry,
+      countryNameTotals = keep(perCountry
+        .join(broadcast(star.country), Seq("country_short_code"))
+        .groupBy("country_name")
+        .agg(sum("total_cases").as("total_cases"), sum("total_deaths").as("total_deaths"))),
+      countryShots = keep(star.dailyVaccineStatistics
+        .groupBy("country_short_code")
+        .agg(sum("new_reported_shots").as("total_shots"))),
+      weeklyVaccinations = keep(weeklyVaccinations(star.dailyVaccineStatistics)),
+    )
+  }
+
   /** Core weekly join (reference: app/routes/data.py:133-146): fact ⋈ country
     * dim ⋈ weekly-vaccinations CTE on computed keys.
+    *
+    * The CTE is broadcast: it has at most one row per country and week, but
+    * a stored copy keeps its lineage's size estimate (225 GiB for a few
+    * hundred rows on `perfbench`'s WHO fixture), so unhinted the planner
+    * shuffles the fact for a sort-merge join on every request.
     */
-  def weeklyJoined(star: StarSchema): DataFrame = {
+  def weeklyJoined(star: StarSchema, weeklyVaccinations: DataFrame): DataFrame = {
     val ws = star.weeklyStatistics
-    val wv = weeklyVaccinations(star.dailyVaccineStatistics)
+    val wv = weeklyVaccinations.withColumnRenamed("country_short_code", "wv_code")
     ws
       .join(broadcast(star.country), Seq("country_short_code"), "left")
       .join(
-        wv.withColumnRenamed("country_short_code", "wv_code"),
-        ws("country_short_code") === col("wv_code") &&
+        broadcast(wv),
+        ws("country_short_code") === wv("wv_code") &&
           year(ws("date_of_report")) === wv("year") &&
           weekofyear(ws("date_of_report")) === wv("week"),
         "left",
@@ -60,35 +112,42 @@ object ServingQueries {
 
   /** GET /weekly_statistics_total — paginated weekly stats
     * (reference: app/routes/data.py:108-178). One ordered plan serves the
-    * page; `totalRows` for the page-count envelope comes from a separate
-    * count on the unsorted fact (SURVEY.md §7 hard-part 5).
+    * page; `totalRows` for the page-count envelope is the fact's row count
+    * ([[weeklyStatisticsTotalRows]]), which the server counts once.
     */
-  def weeklyStatisticsTotal(star: StarSchema, page: Int, limit: Int): DataFrame =
-    weeklyJoined(star)
+  def weeklyStatisticsTotal(star: StarSchema, agg: FactAggregates,
+      page: Int, limit: Int): DataFrame =
+    weeklyJoined(star, agg.weeklyVaccinations)
       .drop("country_short_code")
       .orderBy(col("country").asc_nulls_last, col("date"))
       .offset((page - 1) * limit)
       .limit(limit)
 
+  /** The page over a lineage star, its aggregates unstored (for callers
+    * that hold only a star, such as `perfbench`'s in-process spans). */
+  def weeklyStatisticsTotal(star: StarSchema, page: Int, limit: Int): DataFrame =
+    weeklyStatisticsTotal(star, factAggregates(star), page, limit)
+
   def weeklyStatisticsTotalRows(star: StarSchema): Long = star.weeklyStatistics.count()
 
   /** GET /weekly_statistics_by_country (reference: app/routes/data.py:180-214). */
-  def weeklyStatisticsByCountry(star: StarSchema, countryCode: String): DataFrame =
-    weeklyJoined(star)
+  def weeklyStatisticsByCountry(star: StarSchema, agg: FactAggregates,
+      countryCode: String): DataFrame =
+    weeklyJoined(star, agg.weeklyVaccinations)
       .filter(col("country_short_code") === lit(countryCode))
       .drop("country_short_code")
       .orderBy(col("date"))
 
   /** GET /total_cases, /total_deaths, /total_vaccines
     * (reference: app/routes/data.py:93-106). */
-  def totalCases(star: StarSchema): DataFrame =
-    star.weeklyStatistics.agg(sum("week_new_reported_cases").as("total_weekly_cases"))
+  def totalCases(agg: FactAggregates): DataFrame =
+    agg.countryTotals.agg(sum("total_cases").as("total_weekly_cases"))
 
-  def totalDeaths(star: StarSchema): DataFrame =
-    star.weeklyStatistics.agg(sum("week_new_reported_deaths").as("total_weekly_deaths"))
+  def totalDeaths(agg: FactAggregates): DataFrame =
+    agg.countryTotals.agg(sum("total_deaths").as("total_weekly_deaths"))
 
-  def totalVaccines(star: StarSchema): DataFrame =
-    star.dailyVaccineStatistics.agg(sum("new_reported_shots").as("total_reported_shots"))
+  def totalVaccines(agg: FactAggregates): DataFrame =
+    agg.countryShots.agg(sum("total_shots").as("total_reported_shots"))
 
   /** GET /covid_cases_evolution (reference: app/routes/data.py:216-227):
     * per-date global total, disease-filtered through the 1-row dim (J5). */
@@ -111,20 +170,20 @@ object ServingQueries {
     * Country name added as tiebreaker: Postgres LIMIT ties are arbitrary,
     * a distributed engine must pick deterministically.
     */
-  def top5Deaths(star: StarSchema): DataFrame =
-    star.weeklyStatistics
-      .join(broadcast(star.country), Seq("country_short_code"))
-      .groupBy("country_name")
-      .agg(sum("week_new_reported_deaths").as("total_deaths"))
-      .orderBy(col("total_deaths").desc, col("country_name"))
-      .limit(5)
+  def top5Deaths(agg: FactAggregates): DataFrame = top5(agg, "total_deaths")
 
-  def top5Cases(star: StarSchema): DataFrame =
-    star.weeklyStatistics
-      .join(broadcast(star.country), Seq("country_short_code"))
-      .groupBy("country_name")
-      .agg(sum("week_new_reported_cases").as("total_cases"))
-      .orderBy(col("total_cases").desc, col("country_name"))
+  def top5Cases(agg: FactAggregates): DataFrame = top5(agg, "total_cases")
+
+  /** The two lists over a lineage star, its aggregates unstored (for
+    * callers that hold only a star, such as `perfbench`'s in-process spans). */
+  def top5Deaths(star: StarSchema): DataFrame = top5Deaths(factAggregates(star))
+
+  def top5Cases(star: StarSchema): DataFrame = top5Cases(factAggregates(star))
+
+  private def top5(agg: FactAggregates, total: String): DataFrame =
+    agg.countryNameTotals
+      .select(col("country_name"), col(total))
+      .orderBy(col(total).desc, col("country_name"))
       .limit(5)
 
   /** GET /country_covid_rates (reference: app/routes/data.py:331-364).
@@ -167,18 +226,15 @@ object ServingQueries {
     * columns that don't exist on daily_vaccine_statistics,
     * app/routes/worldmap.py:12-16): per-country totals from the weekly fact.
     */
-  def worldmapCases(star: StarSchema): DataFrame =
-    star.weeklyStatistics.groupBy(col("country_short_code").as("country"))
-      .agg(sum("week_new_reported_cases").as("value"))
+  def worldmapCases(agg: FactAggregates): DataFrame =
+    agg.countryTotals.select(col("country_short_code").as("country"), col("total_cases").as("value"))
 
-  def worldmapDeaths(star: StarSchema): DataFrame =
-    star.weeklyStatistics.groupBy(col("country_short_code").as("country"))
-      .agg(sum("week_new_reported_deaths").as("value"))
+  def worldmapDeaths(agg: FactAggregates): DataFrame =
+    agg.countryTotals.select(col("country_short_code").as("country"), col("total_deaths").as("value"))
 
   /** GET /worldmap/vaccinated — intended: total shots per country. */
-  def worldmapVaccinated(star: StarSchema): DataFrame =
-    star.dailyVaccineStatistics.groupBy(col("country_short_code").as("country"))
-      .agg(sum("new_reported_shots").as("value"))
+  def worldmapVaccinated(agg: FactAggregates): DataFrame =
+    agg.countryShots.select(col("country_short_code").as("country"), col("total_shots").as("value"))
 
   /** GET /graph/country/<metric> — intended semantics (reference maps
     * metrics to nonexistent columns, app/routes/graph.py:10-14): per-country

@@ -14,6 +14,7 @@ import graft.Warehouse
 import graft.etl.StarSchema
 import graft.ml.Forecast
 import graft.queries.ServingQueries
+import graft.queries.ServingQueries.FactAggregates
 
 /** Thin HTTP shell over the serving layer — the analog of the reference's
   * Flask app (app/main.py:27-43 registers blueprints whose route bodies are
@@ -38,10 +39,29 @@ import graft.queries.ServingQueries
   * Each table is checkpointed through a fresh projection, not the caller's
   * Dataset: checkpointing the caller's Dataset would force and keep its
   * executed plan, pinning that plan's broadcast relations and shuffle
-  * files for as long as the caller holds the lineage star. Requests run on
-  * a pool of daemon dispatcher threads sized to the session's
-  * `defaultParallelism`, so concurrent clients overlap instead of queueing
-  * on one dispatcher thread.
+  * files for as long as the caller holds the lineage star.
+  *
+  * `start` also stores, the same way, the small fact aggregates of
+  * [[ServingQueries.FactAggregates]], plus the weekly fact's row count as a
+  * `Long`. Nine routes read only those and the stored star, so none of them
+  * aggregates a fact per request:
+  *  - `total_cases`, `total_deaths`, `total_vaccines` and the three
+  *    `worldmap` routes read the per-country totals and shots;
+  *  - `top5_summary` reads the per-`country_name` totals;
+  *  - `weekly_statistics_by_country` and `weekly_statistics_total` join the
+  *    stored fact with the country dimension and the stored
+  *    `weeklyVaccinations`; the latter's `total_rows` is the stored count.
+  * Their results are exact: every summed column is an integer type, so a
+  * sum of per-country partial sums equals the direct sum, nulls included.
+  * The served star is immutable (no CRUD route writes to it), so the
+  * aggregates never need invalidating. They are not registered in the
+  * catalog, so `/api/table/<name>` still serves only the six star tables.
+  * The evolution routes (`covid_cases_evolution`, `vaccinations_evolution`)
+  * still aggregate a fact per request.
+  *
+  * Requests run on a pool of daemon dispatcher threads sized to the
+  * session's `defaultParallelism`, so concurrent clients overlap instead of
+  * queueing on one dispatcher thread.
   *
   * Response envelopes mirror the reference route by route: plain arrays
   * where `fetch_data` returns records (app/routes/data.py:50-61), a
@@ -64,12 +84,13 @@ object Serve {
     * are dims and a weekly fact, the same "SELECT *" the reference exposes;
     * a 100 TB deployment would cap them like `/api/table/<name>` does.
     */
-  def routes(star: StarSchema): Map[String, Map[String, String] => DataFrame] = Map(
-    "/api/total_cases" -> (_ => ServingQueries.totalCases(star)),
-    "/api/total_deaths" -> (_ => ServingQueries.totalDeaths(star)),
-    "/api/total_vaccines" -> (_ => ServingQueries.totalVaccines(star)),
+  def routes(star: StarSchema, agg: FactAggregates)
+      : Map[String, Map[String, String] => DataFrame] = Map(
+    "/api/total_cases" -> (_ => ServingQueries.totalCases(agg)),
+    "/api/total_deaths" -> (_ => ServingQueries.totalDeaths(agg)),
+    "/api/total_vaccines" -> (_ => ServingQueries.totalVaccines(agg)),
     "/api/weekly_statistics_by_country" -> (p =>
-      ServingQueries.weeklyStatisticsByCountry(star, p("country_code"))),
+      ServingQueries.weeklyStatisticsByCountry(star, agg, p("country_code"))),
     "/api/who_region" -> (_ => star.whoRegion),
     "/api/country" -> (_ => star.country),
     "/api/disease" -> (_ => star.disease),
@@ -79,13 +100,22 @@ object Serve {
   )
 
   /** `{"data": […]}`-enveloped routes (data.py:227/245, worldmap.py:19). */
-  def dataRoutes(star: StarSchema): Map[String, Map[String, String] => DataFrame] = Map(
+  def dataRoutes(star: StarSchema, agg: FactAggregates)
+      : Map[String, Map[String, String] => DataFrame] = Map(
     "/api/covid_cases_evolution" -> (_ => ServingQueries.covidCasesEvolution(star)),
     "/api/vaccinations_evolution" -> (_ => ServingQueries.vaccinationsEvolution(star)),
-    "/api/worldmap/cases" -> (_ => ServingQueries.worldmapCases(star)),
-    "/api/worldmap/deaths" -> (_ => ServingQueries.worldmapDeaths(star)),
-    "/api/worldmap/vaccinated" -> (_ => ServingQueries.worldmapVaccinated(star)),
+    "/api/worldmap/cases" -> (_ => ServingQueries.worldmapCases(agg)),
+    "/api/worldmap/deaths" -> (_ => ServingQueries.worldmapDeaths(agg)),
+    "/api/worldmap/vaccinated" -> (_ => ServingQueries.worldmapVaccinated(agg)),
   )
+
+  /** Both route maps over a lineage star, its aggregates unstored (for
+    * callers that hold only a star, such as `perfbench`'s in-process spans). */
+  def routes(star: StarSchema): Map[String, Map[String, String] => DataFrame] =
+    routes(star, ServingQueries.factAggregates(star))
+
+  def dataRoutes(star: StarSchema): Map[String, Map[String, String] => DataFrame] =
+    dataRoutes(star, ServingQueries.factAggregates(star))
 
   private def queryParams(ex: HttpExchange): Map[String, String] =
     Option(ex.getRequestURI.getQuery).map(_.split("&").toSeq).getOrElse(Seq.empty)
@@ -152,6 +182,8 @@ object Serve {
     val served = star.materialized
     val spark = served.country.sparkSession
     Warehouse.register(spark, served)
+    val agg = ServingQueries.factAggregates(served, StarSchema.stored)
+    val factRows = ServingQueries.weeklyStatisticsTotalRows(served)
 
     // lazily-built heavyweight surfaces, computed once then O(1) per request
     lazy val predicted = Forecast.forecastAll(
@@ -199,8 +231,8 @@ object Serve {
     server.createContext("/health", (ex: HttpExchange) =>
       respond(ex, 200, """{"status":"running"}"""))
 
-    val arr = routes(served)
-    val env = dataRoutes(served)
+    val arr = routes(served, agg)
+    val env = dataRoutes(served, agg)
 
     server.createContext("/api", (ex: HttpExchange) => {
       val path = ex.getRequestURI.getPath
@@ -209,7 +241,7 @@ object Serve {
           case (Some(fn), _) => respond(ex, 200, jsonArray(fn(queryParams(ex))))
           case (_, Some(fn)) =>
             respond(ex, 200, s"""{"data":${jsonArray(fn(queryParams(ex)))}}""")
-          case _ => handleSpecial(ex, path, served, spark, population,
+          case _ => handleSpecial(ex, path, served, agg, factRows, spark, population,
             () => predicted, () => metricsJson, rfModelFor)
         }
       } catch {
@@ -295,7 +327,8 @@ object Serve {
 
   /** Routes with bespoke envelopes or path parameters. */
   private def handleSpecial(
-      ex: HttpExchange, path: String, star: StarSchema, spark: SparkSession,
+      ex: HttpExchange, path: String, star: StarSchema, agg: FactAggregates,
+      factRows: Long, spark: SparkSession,
       population: Option[DataFrame], predicted: () => DataFrame,
       metricsJson: () => String,
       rfModelFor: String => org.apache.spark.ml.regression.RandomForestRegressionModel,
@@ -306,16 +339,15 @@ object Serve {
       val p = queryParams(ex)
       val page = p.getOrElse("page", "1").toInt
       val limit = p.getOrElse("limit", "100").toInt
-      val totalRows = ServingQueries.weeklyStatisticsTotalRows(star)
-      val totalPages = math.ceil(totalRows.toDouble / limit).toInt
-      val data = jsonArray(ServingQueries.weeklyStatisticsTotal(star, page, limit))
+      val totalPages = math.ceil(factRows.toDouble / limit).toInt
+      val data = jsonArray(ServingQueries.weeklyStatisticsTotal(star, agg, page, limit))
       respond(ex, 200,
-        s"""{"page":$page,"limit":$limit,"total_pages":$totalPages,"total_rows":$totalRows,"data":$data}""")
+        s"""{"page":$page,"limit":$limit,"total_pages":$totalPages,"total_rows":$factRows,"data":$data}""")
 
     // two-list summary (data.py:271-298)
     case "/api/top5_summary" =>
       respond(ex, 200,
-        s"""{"top5_deaths":${jsonArray(ServingQueries.top5Deaths(star))},"top5_cases":${jsonArray(ServingQueries.top5Cases(star))}}""")
+        s"""{"top5_deaths":${jsonArray(ServingQueries.top5Deaths(agg))},"top5_cases":${jsonArray(ServingQueries.top5Cases(agg))}}""")
 
     case "/api/country_covid_rates" =>
       population match {

@@ -14,33 +14,34 @@ class ServingQueriesSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   lazy val star = EtlJob.run(spark, referenceDataDir)
+  lazy val agg = ServingQueries.factAggregates(star)
   lazy val covid = EtlJob.prepareCovid(
     EtlJob.readWhoCovid(spark, s"$referenceDataDir/WHO-COVID-19-global-data.csv"))
 
   test("total_cases endpoint equals the evolution series' grand total") {
-    val total = ServingQueries.totalCases(star).collect()(0).getLong(0)
+    val total = ServingQueries.totalCases(agg).collect()(0).getLong(0)
     val evolution = ServingQueries.covidCasesEvolution(star)
       .agg(sum("total_cases")).collect()(0).getLong(0)
     assert(total == evolution)
     // golden values from the committed snapshot (independently computed
     // with DuckDB over the raw CSV)
     assert(total == 777126421L)
-    val deaths = ServingQueries.totalDeaths(star).collect()(0).getLong(0)
+    val deaths = ServingQueries.totalDeaths(agg).collect()(0).getLong(0)
     assert(deaths == 7079925L)
   }
 
   test("top5 rankings are 5 rows, strictly ordered") {
-    val deaths = ServingQueries.top5Deaths(star).collect()
+    val deaths = ServingQueries.top5Deaths(agg).collect()
     assert(deaths.length == 5)
     val vals = deaths.map(_.getLong(1)).toSeq
     assert(vals == vals.sortBy(-_))
-    val cases = ServingQueries.top5Cases(star).collect()
+    val cases = ServingQueries.top5Cases(agg).collect()
     assert(cases.length == 5)
   }
 
   test("weekly pagination: page partitions the ordered stream exactly") {
-    val p1 = ServingQueries.weeklyStatisticsTotal(star, page = 1, limit = 50).collect()
-    val p2 = ServingQueries.weeklyStatisticsTotal(star, page = 2, limit = 50).collect()
+    val p1 = ServingQueries.weeklyStatisticsTotal(star, agg, page = 1, limit = 50).collect()
+    val p2 = ServingQueries.weeklyStatisticsTotal(star, agg, page = 2, limit = 50).collect()
     assert(p1.length == 50 && p2.length == 50)
     assert(p1.toSet.intersect(p2.toSet).isEmpty)
     val totalRows = ServingQueries.weeklyStatisticsTotalRows(star)
@@ -48,7 +49,7 @@ class ServingQueriesSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("weekly_statistics_by_country returns a dated series for FR") {
-    val fr = ServingQueries.weeklyStatisticsByCountry(star, "FR").collect()
+    val fr = ServingQueries.weeklyStatisticsByCountry(star, agg, "FR").collect()
     assert(fr.length == 261) // every weekly bucket
     assert(fr.forall(_.getAs[String]("country") == "France"))
   }
@@ -150,7 +151,7 @@ class ServingQueriesSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("worldmap + graph intended semantics") {
-    val cases = ServingQueries.worldmapCases(star)
+    val cases = ServingQueries.worldmapCases(agg)
     assert(cases.count() == 240)
     val fr = ServingQueries.graphCountry(star, "FR", "cases").collect()
     assert(fr.length == 261)

@@ -5,14 +5,21 @@ import java.net.{HttpURLConnection, Socket, URI}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import java.util.concurrent.{Callable, ConcurrentLinkedQueue, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.io.Source
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.graftaccess.GraftSparkAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, Warehouse}
 import graft.etl.EtlJob
 
 /** Serving over a tiny WHO-shaped CSV trio written here, so it runs without
@@ -24,9 +31,11 @@ import graft.etl.EtlJob
   *
   * Pins the serving topology: `Serve.start` materializes the star once, so
   * every read route keeps answering, byte for byte, after the CSVs are
-  * deleted; and requests run on a dispatcher pool, so a client slow to send
-  * its body does not hold up the others and concurrent clients each read
-  * their own writes.
+  * deleted; the routes over its stored fact aggregates answer what
+  * aggregating the star's facts answers, in a bounded number of jobs; and
+  * requests run on a dispatcher pool, so a client slow to send its body
+  * does not hold up the others and concurrent clients each read their own
+  * writes.
   */
 class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
 
@@ -73,7 +82,9 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
     dir
   }
 
-  private lazy val server = Serve.start(EtlJob.run(spark, dataDir.toString), port = 0)
+  /** The ETL's lineage star over the CSVs; `Serve.start` stores its own copy. */
+  private lazy val star = EtlJob.run(spark, dataDir.toString)
+  private lazy val server = Serve.start(star, port = 0)
 
   override def afterAll(): Unit = {
     try server.stop(0)
@@ -162,6 +173,126 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
           (200 -> """{"country":"SLOW","total_cases":2,"total_vaccinated":0}"""))
       } finally sock.close()
     } finally for (k <- Seq("SLOW", "FAST")) request("DELETE", s"/country_statistics/$k")
+  }
+
+  test("routes over the stored aggregates answer what aggregating the star answers") {
+    // the reference bodies aggregate the fixture star's facts directly
+    val M = new ObjectMapper()
+    val ws = star.weeklyStatistics
+    val dv = star.dailyVaccineStatistics
+    def records(df: DataFrame): Seq[String] = Warehouse.jsonRecords(df).collect().toSeq
+    def array(df: DataFrame): String = records(df).mkString("[", ",", "]")
+    def body(path: String): String = {
+      val (code, b) = get(path)
+      assert(code == 200, s"$path: $b")
+      b
+    }
+    def sortedRows(json: String): Seq[String] = {
+      val node = M.readTree(json)
+      val rows = if (node.isArray) node else node.path("data")
+      rows.elements().asScala.map(_.toString).toSeq.sorted
+    }
+    def sortedRecords(df: DataFrame): Seq[String] =
+      records(df).map(M.readTree(_).toString).sorted
+
+    // unordered routes: the same row set
+    for ((path, ref) <- Seq(
+        "/api/total_cases" -> ws.agg(sum("week_new_reported_cases").as("total_weekly_cases")),
+        "/api/total_deaths" -> ws.agg(sum("week_new_reported_deaths").as("total_weekly_deaths")),
+        "/api/total_vaccines" -> dv.agg(sum("new_reported_shots").as("total_reported_shots")),
+        "/api/worldmap/cases" -> ws.groupBy(col("country_short_code").as("country"))
+          .agg(sum("week_new_reported_cases").as("value")),
+        "/api/worldmap/deaths" -> ws.groupBy(col("country_short_code").as("country"))
+          .agg(sum("week_new_reported_deaths").as("value")),
+        "/api/worldmap/vaccinated" -> dv.groupBy(col("country_short_code").as("country"))
+          .agg(sum("new_reported_shots").as("value")))) {
+      val want = sortedRecords(ref)
+      assert(want.nonEmpty, path)
+      assert(sortedRows(body(path)) == want, path)
+    }
+
+    // ordered routes: the same body
+    def top5(measure: String, as: String): DataFrame =
+      ws.join(broadcast(star.country), Seq("country_short_code"))
+        .groupBy("country_name")
+        .agg(sum(measure).as(as))
+        .orderBy(col(as).desc, col("country_name"))
+        .limit(5)
+    assert(body("/api/top5_summary") ==
+      s"""{"top5_deaths":${array(top5("week_new_reported_deaths", "total_deaths"))},""" +
+        s""""top5_cases":${array(top5("week_new_reported_cases", "total_cases"))}}""")
+
+    val wv = dv.groupBy(
+        col("country_short_code").as("wv_code"),
+        year(col("day_of_report")).as("year"),
+        weekofyear(col("day_of_report")).as("week"))
+      .agg(sum("new_reported_shots").as("total_weekly_vaccinations"))
+    val joined = ws.join(broadcast(star.country), Seq("country_short_code"), "left")
+      .join(wv, ws("country_short_code") === wv("wv_code") &&
+        year(ws("date_of_report")) === wv("year") &&
+        weekofyear(ws("date_of_report")) === wv("week"), "left")
+      .select(ws("date_of_report").as("date"), col("country_name").as("country"),
+        col("week_new_reported_cases").as("confirmed_cases"),
+        col("week_new_reported_deaths").as("deaths"),
+        col("total_weekly_vaccinations").as("vaccinations"),
+        ws("country_short_code"))
+    for (code <- Seq("FR", "DE", "ZZ")) {
+      val ref = joined.filter(col("country_short_code") === code)
+        .drop("country_short_code").orderBy("date")
+      assert(body(s"/api/weekly_statistics_by_country?country_code=$code") == array(ref), code)
+    }
+    assert(M.readTree(body("/api/weekly_statistics_by_country?country_code=DE"))
+      .elements().asScala.exists(_.hasNonNull("vaccinations")))
+
+    val rows = ws.count()
+    assert(rows == codes.length * weeks)
+    val ordered = joined.drop("country_short_code")
+      .orderBy(col("country").asc_nulls_last, col("date"))
+    for (page <- Seq(1, 2, 12, 13)) {
+      val ref = array(ordered.offset((page - 1) * 5).limit(5))
+      assert(body(s"/api/weekly_statistics_total?page=$page&limit=5") ==
+        s"""{"page":$page,"limit":5,"total_pages":${(rows + 4) / 5},"total_rows":$rows,""" +
+          s""""data":$ref}""", s"page $page")
+    }
+  }
+
+  test("warm aggregate routes run at most two jobs; the page runs no count") {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    // one entry per SQL query: its call site and physical plan
+    val queries = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case q: SparkListenerSQLExecutionStart =>
+          queries.add(s"${q.description}: ${q.physicalPlanDescription.take(200)}"); ()
+        case _ =>
+      }
+    }
+    /** The jobs and SQL queries of one warm request. */
+    def warm(path: String): (Int, Seq[String]) = {
+      assert(get(path)._1 == 200, path)
+      jobs.set(0)
+      queries.clear()
+      sc.addSparkListener(listener)
+      try {
+        assert(get(path)._1 == 200, path)
+        GraftSparkAccess.drainListenerBus(sc)
+        (jobs.get(), queries.asScala.toSeq)
+      } finally sc.removeSparkListener(listener)
+    }
+    for (path <- Seq("/api/top5_summary", "/api/worldmap/cases", "/api/worldmap/deaths",
+        "/api/worldmap/vaccinated", "/api/total_cases", "/api/total_deaths",
+        "/api/total_vaccines")) {
+      val (n, _) = warm(path)
+      assert(n <= 2, s"$path ran $n jobs")
+    }
+    // the page is the request's only query: `total_rows` counts nothing
+    val (_, paged) = warm("/api/weekly_statistics_total?page=2&limit=5")
+    assert(paged.length == 1, s"weekly_statistics_total ran ${paged.length} queries:\n" +
+      paged.mkString("\n"))
   }
 
   test("reads are served from the star materialized at start, not the CSVs") {

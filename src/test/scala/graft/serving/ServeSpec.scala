@@ -25,6 +25,7 @@ class ServeSpec extends AnyFunSuite with SparkSpec {
       .toDF("country_code", "year", "population")
   }
   lazy val server = Serve.start(star, port = 0, population = Some(population))
+  lazy val agg = graft.queries.ServingQueries.factAggregates(star)
 
   private def request(method: String, path: String, body: Option[String] = None): (Int, String) = {
     val url = URI.create(
@@ -73,7 +74,7 @@ class ServeSpec extends AnyFunSuite with SparkSpec {
   test("metric endpoint body == jsonRecords of the DataFrame it wraps") {
     val (code, body) = get("/api/total_cases")
     assert(code == 200)
-    assert(body == direct(graft.queries.ServingQueries.totalCases(star)))
+    assert(body == direct(graft.queries.ServingQueries.totalCases(agg)))
   }
 
   test("every per-table scan route serves its star table") {
@@ -94,7 +95,7 @@ class ServeSpec extends AnyFunSuite with SparkSpec {
     val (code, body) = get("/api/weekly_statistics_total?page=2&limit=5")
     assert(code == 200)
     val data = direct(graft.queries.ServingQueries
-      .weeklyStatisticsTotal(star, page = 2, limit = 5))
+      .weeklyStatisticsTotal(star, agg, page = 2, limit = 5))
     val totalRows = graft.queries.ServingQueries.weeklyStatisticsTotalRows(star)
     val totalPages = math.ceil(totalRows.toDouble / 5).toInt
     assert(body ==
@@ -107,10 +108,10 @@ class ServeSpec extends AnyFunSuite with SparkSpec {
           graft.queries.ServingQueries.covidCasesEvolution(star),
         "/api/vaccinations_evolution" ->
           graft.queries.ServingQueries.vaccinationsEvolution(star),
-        "/api/worldmap/cases" -> graft.queries.ServingQueries.worldmapCases(star),
-        "/api/worldmap/deaths" -> graft.queries.ServingQueries.worldmapDeaths(star),
+        "/api/worldmap/cases" -> graft.queries.ServingQueries.worldmapCases(agg),
+        "/api/worldmap/deaths" -> graft.queries.ServingQueries.worldmapDeaths(agg),
         "/api/worldmap/vaccinated" ->
-          graft.queries.ServingQueries.worldmapVaccinated(star))) {
+          graft.queries.ServingQueries.worldmapVaccinated(agg))) {
       val (code, body) = get(route)
       assert(code == 200, route)
       assert(body == s"""{"data":${direct(df)}}""", route)
@@ -121,7 +122,7 @@ class ServeSpec extends AnyFunSuite with SparkSpec {
     val (code, body) = get("/api/top5_summary")
     assert(code == 200)
     assert(body ==
-      s"""{"top5_deaths":${direct(graft.queries.ServingQueries.top5Deaths(star))},"top5_cases":${direct(graft.queries.ServingQueries.top5Cases(star))}}""")
+      s"""{"top5_deaths":${direct(graft.queries.ServingQueries.top5Deaths(agg))},"top5_cases":${direct(graft.queries.ServingQueries.top5Cases(agg))}}""")
   }
 
   test("country_covid_rates joins the provided population input") {
