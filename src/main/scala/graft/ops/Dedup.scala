@@ -430,37 +430,27 @@ object Dedup {
 
   /** Connected components over an undirected edge list (a, b) by iterative
     * min-label propagation: every node starts labeled with itself; each
-    * round every node takes the min of its own and its neighbors' labels;
-    * combined with pointer jumping (adopt the label of your label-holder),
-    * which doubles label reach per round → fixpoint in O(log diameter)
-    * rounds. Each round is two joins + one groupBy — fully distributed;
-    * only the converged? check touches the driver, and localCheckpoint
-    * keeps every round's plan O(1) instead of accreting lineage. A
-    * web-scale general graph would switch to large-star/small-star
-    * contraction; the skeleton is the same.
+    * round every node takes the min of its own and its neighbors' labels,
+    * then also adopts the label of its label-holder (pointer jumping). The
+    * loop runs until a round lowers no label; labels only fall and come
+    * from the finite set of node ids, so it terminates, and the result is
+    * exact at any diameter. Pointer jumping shortens some chains but does
+    * not bound the round count: on a path whose ids rise away from its
+    * minimum, the minimum moves one hop per round, so rounds are
+    * O(diameter) in the worst case. Each round is two joins + one groupBy
+    * — fully distributed; only the converged? check touches the driver,
+    * and localCheckpoint keeps every round's plan O(1) instead of accreting
+    * lineage. Large-star/small-star contraction would bound the rounds
+    * logarithmically.
     */
-  def connectedComponents(edges: DataFrame): DataFrame = {
-    val parent = edges.sparkSession
+  def connectedComponents(edges: DataFrame): DataFrame =
     // the candidate graph is orders of magnitude smaller than the corpus —
     // per-round shuffles are sized to it, not to the session's batch width
-    // (same principle as the streaming state stores). The width lives on a
-    // CHILD session (own SQLConf, shared context/cache) instead of a
-    // set/restore on the caller's conf, which raced against any concurrent
-    // planning on the shared session. Edge list and result cross sessions
-    // as RDDs: the input plan is compiled under the parent's conf, the
-    // loop's plans under the child's, and `labels` is localCheckpoint-
-    // materialized so the re-home is free.
-    val ss = parent.newSession()
-    // width tracks the candidate graph's size (floor 8, capped at the
-    // parent's width) instead of a constant — see LoopWidth scaladoc
-    ss.conf.set("spark.sql.shuffle.partitions",
-      graft.util.LoopWidth.forRelation(edges).toString)
-    val homed = org.apache.spark.sql.graftaccess.ReHome(ss, edges.toDF("a", "b"))
-    val labels = connectedComponentsLoop(homed)
-    org.apache.spark.sql.graftaccess.ReHome(parent, labels)
-  }
+    graft.util.Fixpoint.run("connectedComponents", edges.toDF("a", "b")) { in =>
+      connectedComponentsLoop(in.head)
+    }
 
-  private def connectedComponentsLoop(edges: DataFrame): DataFrame = {
+  private def connectedComponentsLoop(edges: DataFrame): (DataFrame, Int) = {
     val sym = edges.select(col("a"), col("b"))
       .union(edges.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint()
@@ -478,15 +468,15 @@ object Dedup {
       .unionByName(labels.select(col("id").as("a"), col("id").as("b")))
     var changed = true
     var rounds = 0
-    while (changed && rounds < 20) {
+    while (changed) {
       // 1) min label over the neighborhood INCLUDING self (see symSelf)
       val afterN = symSelf.join(labels, symSelf("a") === labels("id"))
         .groupBy(symSelf("b").as("id"))
         .agg(min(col("comp")).as("comp"),
           min(when(col("a") === col("b"), col("comp"))).as("old"))
-      // 2) pointer jump: also adopt the label of the current label-holder —
-      //    label distance doubles per round, so rounds are O(log diameter)
-      //    instead of O(diameter) (a chain otherwise forces one round per hop)
+      // 2) pointer jump: also adopt the label of the current label-holder,
+      //    which skips ahead along chains whose labels point onward (it does
+      //    not bound the round count; see the scaladoc)
       val byId = afterN.select(col("id").as("jid"), col("comp").as("jcomp"))
       val jumped = afterN.join(byId, afterN("comp") === byId("jid"), "left")
         .select(col("id"),
@@ -499,7 +489,7 @@ object Dedup {
       labels = jumped.select(col("id"), col("comp"))
       rounds += 1
     }
-    labels
+    (labels, rounds)
   }
 
   /** d06 — near-duplicate CLUSTERS: strong MinHash candidates

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.queries.Q
+import graft.util.Fixpoint
 
 /** Iterative graph analytics over the order graph — PageRank (Page et al.
   * 1999) and multi-source BFS, in the vertex-program-as-joins topology of
@@ -27,8 +28,8 @@ import graft.queries.Q
   * built ONCE and cached; each iteration is one hash join (edges ⋈ scores
   * on src — scores are node-cardinality, orders of magnitude smaller than
   * edges) followed by one partial-aggregating shuffle on dst. Lineage is
-  * cut per iteration with localCheckpoint exactly like the d06 CC loop, so
-  * ten iterations stay ten cheap stages instead of one exponential plan.
+  * cut with localCheckpoint every third iteration (never after the last),
+  * so ten iterations stay a few shallow plans instead of one deep one.
   * At 1000 executors the edge partitioning is reused across all ten
   * iterations (AQE re-plans the tiny score side), which is how industrial
   * PageRank runs; nothing driver-side ever sees an edge.
@@ -43,47 +44,30 @@ object Graph {
     */
   val Iters = 10
 
-  /** pr01 — PageRank over the undirected customer↔supplier graph: nodes
-    * are customers and suppliers that traded (via orders ⋈ lineitem),
-    * with an edge per distinct trading pair in both directions (so no
-    * dangling mass sinks). Node encoding 2·custkey / 2·suppkey+1 keeps the
-    * two key spaces disjoint through the loop; the output decodes back to
-    * (node_type, node_key, score).
-    */
   /** Core loop over an arbitrary directed edge list (`src`, `dst` BIGINT;
     * every node must have out-degree ≥ 1 — build edges undirected, as pr01
-    * does, to guarantee it). Returns (node, score) with Σscore ≤ [[Scale]].
+    * does, to guarantee it). Returns (node, score) with Σscore ≤ [[Scale]];
+    * an empty edge list yields an empty result.
+    *
+    * Sizing contract: callers must pass an edge relation whose optimizer
+    * stats are trustworthy — a projection/union over CACHED relations
+    * (pr01/sp01 pass a union over the cached trade-pair relation) or a raw
+    * scan. An uncached join plan reports the PRODUCT of its children's
+    * sizes (Catalyst's pessimistic default), which slammed the loop into
+    * the session cap in round 12 — ¾ of pr01's width-32 CPU was per-round
+    * task overhead. Sizing from the caller's cached stats saves a private
+    * materialization of the edge list per query (the loop builds its own
+    * src-partitioned cache below anyway).
     */
-  /** NOTE (sizing contract): callers must pass an edge relation whose
-    * optimizer stats are trustworthy — a projection/union over CACHED
-    * relations (pr01/sp01 pass a union over the cached trade-pair
-    * relation) or a raw scan. An uncached join plan reports the PRODUCT of
-    * its children's sizes (Catalyst's pessimistic default), which slammed
-    * the loop into the session cap in round 12 — ¾ of pr01's width-32 CPU
-    * was per-round task overhead. The previous fix materialized a private
-    * copy here; sizing from the caller's cached stats instead saves one
-    * whole materialization of the edge list per query (the loop builds its
-    * own src-partitioned cache below anyway).
-    */
-  def pageRank(edgesIn: DataFrame, iters: Int = Iters): DataFrame = {
+  def pageRank(edgesIn: DataFrame, iters: Int = Iters): DataFrame =
     // score vectors are node-cardinality — orders of magnitude below the
-    // session's batch width. Pin the loop's shuffle width on a CHILD
-    // session (the d06 CC pattern: own SQLConf, shared context/cache; the
-    // input plan compiles under the parent's width, the loop's under the
-    // child's) so ten iterations aren't sixty near-empty-partition stages.
-    val parent = edgesIn.sparkSession
-    val ss = parent.newSession()
-    val e = edgesIn.select("src", "dst")
-    ss.conf.set("spark.sql.shuffle.partitions",
-      graft.util.LoopWidth.forRelation(e).toString)
-    // internal-row re-home (see ReHome scaladoc): the public createDataFrame
-    // bridge cost 5.9 s CPU here round-tripping edges through external Rows
-    val labels = pageRankLoop(
-      org.apache.spark.sql.graftaccess.ReHome(ss, e), iters)
-    org.apache.spark.sql.graftaccess.ReHome(parent, labels)
-  }
+    // session's batch width, so ten iterations run at the loop's own width
+    // instead of sixty near-empty-partition stages
+    Fixpoint.run("pageRank", edgesIn.select("src", "dst")) { in =>
+      pageRankLoop(in.head, iters)
+    }
 
-  private def pageRankLoop(edgesIn: DataFrame, iters: Int): DataFrame = {
+  private def pageRankLoop(edgesIn: DataFrame, iters: Int): (DataFrame, Int) = {
     val s = edgesIn.sparkSession
     import s.implicits._
     // hash-partition the edge list by join key ONCE, with each source's
@@ -102,6 +86,7 @@ object Graph {
     // is the whole setup (guide §1.2 — don't compute things you throw away)
     val nodes = edges.select($"src".as("node")).distinct().localCheckpoint()
     val n = nodes.count()
+    if (n == 0) return (nodes.select($"node", lit(0L).as("score")), 0)
     val init = Scale / n
     val teleport = init * 3 / 20 // (1 − d)·init with d = 17/20, floored
     def step(cur: DataFrame): DataFrame =
@@ -123,7 +108,7 @@ object Graph {
       // and each localCheckpoint is a whole extra job — at ten iterations
       // the checkpoint jobs dominated the loop's wall-clock. The FINAL
       // round is exempt (round 14): its state has exactly one consumer
-      // (the caller's single job through ReHome), so a checkpoint there
+      // (the caller's single job through the re-home), so a checkpoint there
       // is a whole extra materialization of the score vector buying
       // nothing — the last segment is ≤ (iters mod 3) rounds of lineage
       // over the previous checkpoint.
@@ -139,45 +124,29 @@ object Graph {
         // unrolls (a true fixpoint is the period-1 case). Probing only
         // materialized checkpoints costs node-cardinality joins and zero
         // edge-join recomputation.
-        // probe only when success skips ≥ one full 3-round cycle: at
+        // Probe only when success skips ≥ one full 3-round cycle: at
         // i = iters − 1 a successful probe still runs (iters−i) % 3 = 1
-        // step — the probe's joins would cost more than they can save
-        if (i + 3 <= iters) {
-          // full-outer so the probe proves SET equality too: a node present
-          // in only one checkpoint (score sets can shrink/grow while mass
-          // rebalances) surfaces as a null side and vetoes the exit —
-          // equality on the intersection alone would not be periodicity
-          val same = scores
-            .join(prevCp.select($"node", $"score".as("prev_score")),
-              Seq("node"), "full_outer")
-            .filter($"score".isNull || $"prev_score".isNull ||
-              $"score" =!= $"prev_score")
-            .isEmpty
-          if (same) {
-            for (_ <- 1 to ((iters - i) % 3)) { scores = step(scores); executed += 1 }
-            scores = scores.localCheckpoint()
-            done = true
-          }
+        // step — the probe's joins would cost more than they can save. The
+        // probe is full-outer: score SETS can shrink or grow while mass
+        // rebalances, and equality on the intersection alone would not be
+        // periodicity.
+        if (i + 3 <= iters && Fixpoint.same(scores, prevCp, "node", "score")) {
+          for (_ <- 1 to ((iters - i) % 3)) { scores = step(scores); executed += 1 }
+          scores = scores.localCheckpoint()
+          done = true
         }
         prevCp = scores
       } else scores = next
       i += 1
     }
-    Graph.lastExecutedRounds = executed
-    scores
+    (scores, executed)
   }
-
-  /** Diagnostic only (read by the fast-convergence spec): how many rounds
-    * the last [[pageRankLoop]] actually executed after the fixed-point
-    * early exit. Not part of any query's semantics.
-    */
-  @volatile private[ops] var lastExecutedRounds: Int = -1
 
   /** The undirected trade edge list shared by pr01/sp01 — distinct
     * (customer, supplier) pairs CACHED once, both union branches scanning
     * the cache: the lineitem ⋈ orders join and its distinct run one time
     * instead of once per branch, and the union-over-cached stats are
-    * accurate for the loops' LoopWidth sizing without a second
+    * accurate for the loops' width sizing without a second
     * materialization.
     */
   private def tradePairs(s: SparkSession, dir: String): DataFrame = {
@@ -204,6 +173,13 @@ object Graph {
       .unionByName(pairs.select($"sn".as("src"), $"c".as("dst")))
   }
 
+  /** pr01 — PageRank over the undirected customer↔supplier graph: nodes
+    * are customers and suppliers that traded (via orders ⋈ lineitem),
+    * with an edge per distinct trading pair in both directions (so no
+    * dangling mass sinks). Node encoding 2·custkey / 2·suppkey+1 keeps the
+    * two key spaces disjoint through the loop; the output decodes back to
+    * (node_type, node_key, score).
+    */
   def pr01(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val edges = tradeEdges(tradePairs(s, dir))
@@ -266,30 +242,21 @@ object Graph {
     * min-aggregation makes reached sets merge-order free.
     */
   def bfsHops(edgesIn: DataFrame, sourcesIn: DataFrame,
-      maxHops: Int = MaxHops): DataFrame = {
-    // same child-session data-derived width as pageRank; both inputs
-    // re-home. Same sizing contract as pageRank: the caller passes a
-    // stats-accurate edge relation (sp01: union over cached pairs), so no
-    // private materialization is needed here.
-    val parent = edgesIn.sparkSession
-    val ss = parent.newSession()
-    val e = edgesIn.select("src", "dst")
-    ss.conf.set("spark.sql.shuffle.partitions",
-      graft.util.LoopWidth.forRelation(e).toString)
-    val src = sourcesIn.select("node")
-    val visited = bfsLoop(
-      org.apache.spark.sql.graftaccess.ReHome(ss, e),
-      org.apache.spark.sql.graftaccess.ReHome(ss, src), maxHops)
-    org.apache.spark.sql.graftaccess.ReHome(parent, visited)
-  }
+      maxHops: Int = MaxHops): DataFrame =
+    // same sizing contract as pageRank: the caller passes a stats-accurate
+    // edge relation (sp01: union over cached pairs)
+    Fixpoint.run("bfsHops", edgesIn.select("src", "dst"),
+        sourcesIn.select("node")) { in =>
+      bfsLoop(in(0), in(1), maxHops)
+    }
 
   private def bfsLoop(edgesIn: DataFrame, sources: DataFrame,
-      maxHops: Int): DataFrame = {
+      maxHops: Int): (DataFrame, Int) = {
     val s = edgesIn.sparkSession
     import s.implicits._
     // cached pre-partitioned by src at the loop's width: every round joins
     // on src, and the narrow layout also makes the per-round scan
-    // LoopWidth tasks instead of inheriting the parent-width union's
+    // loop-width tasks instead of inheriting the parent-width union's
     // partition count (measured 64 scan tasks per round at sf0.1 — pure
     // task-launch overhead on a loop this small)
     val edges = graft.util.Eager.cached(
@@ -322,7 +289,7 @@ object Graph {
       }
       h += 1
     }
-    visited
+    (visited, h - 1)
   }
 
   /** sp01 — supply-chain proximity: hop distance from the EUROPE-nation
@@ -564,7 +531,7 @@ object Graph {
     * degree.
     *
     * Scale shape: the edge list is cached ONCE on the loop's child session
-    * (width data-derived via [[graft.util.LoopWidth]], the d06/pr01
+    * (width data-derived via [[graft.util.Fixpoint.width]], the d06/pr01
     * pattern); per-round shuffle work is |alive edges| and shrinks
     * monotonically; alive sets are node-cardinality and lineage-cut per
     * round; nothing driver-side ever sees an edge. At 100 TB the peel is
@@ -579,18 +546,13 @@ object Graph {
     * neighborhood collapses under peeling).
     */
   def kCore(edgesIn: DataFrame, k: Int = CoreK,
-      rounds: Int = CoreRounds): DataFrame = {
-    val parent = edgesIn.sparkSession
-    val ss = parent.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions",
-      graft.util.LoopWidth.forRelation(edgesIn).toString)
-    val e = edgesIn.select("src", "dst")
-    val out = kCoreLoop(
-      org.apache.spark.sql.graftaccess.ReHome(ss, e), k, rounds)
-    org.apache.spark.sql.graftaccess.ReHome(parent, out)
-  }
+      rounds: Int = CoreRounds): DataFrame =
+    Fixpoint.run("kCore", edgesIn.select("src", "dst")) { in =>
+      kCoreLoop(in.head, k, rounds)
+    }
 
-  private def kCoreLoop(edgesIn: DataFrame, k: Int, rounds: Int): DataFrame = {
+  private def kCoreLoop(edgesIn: DataFrame, k: Int,
+      rounds: Int): (DataFrame, Int) = {
     val s = edgesIn.sparkSession
     import s.implicits._
     // src-partitioned at the loop width (the bfsLoop/lpaLoop layout): the
@@ -604,7 +566,7 @@ object Graph {
       .join(alive.select($"node".as("dst")), Seq("dst"), "left_semi")
     var alive = edges.select($"src".as("node")).distinct().localCheckpoint()
     var aliveN = alive.count()
-    for (_ <- 1 to rounds) {
+    for (r <- 1 to rounds) {
       val withDeg = aliveEdges(alive)
         .groupBy($"src").agg(count(lit(1)).as("core_deg"))
         .filter($"core_deg" >= k)
@@ -622,16 +584,16 @@ object Graph {
         // to the CASCADE DEPTH of the data, not the worst-case budget
         // (sf0.1: 7.5 s → ~2 s; the count() per round is a trivial job
         // on the just-checkpointed node-cardinality relation).
-        return withDeg
+        return (withDeg, r)
       }
       alive = withDeg.select($"node")
       aliveN = n
     }
     // round budget exhausted before convergence: the documented
     // bounded-round contract — recount degrees within the final set
-    aliveEdges(alive)
+    (aliveEdges(alive)
       .groupBy($"src").agg(count(lit(1)).as("core_deg"))
-      .select($"src".as("node"), $"core_deg")
+      .select($"src".as("node"), $"core_deg"), rounds)
   }
 
   /** kc01 — the [[CoreK]]-core of the supplier co-supply decile graph
@@ -702,7 +664,7 @@ object Graph {
     *
     * Scale shape: the edge list is cached once, pre-partitioned by src on
     * the loop's child session (width data-derived via
-    * [[graft.util.LoopWidth]]); each round is one join against the
+    * [[graft.util.Fixpoint.width]]); each round is one join against the
     * node-cardinality label vector (reusing the edge partitioning), one
     * (dst, lbl) partial-agg shuffle, and one per-dst argmax collapse —
     * the (cnt, −lbl) struct-max, so the tie rule rides the aggregate
@@ -718,18 +680,12 @@ object Graph {
     * the destinations reached), and the result is still exactly the
     * round-`rounds` state.
     */
-  def labelPropagation(edgesIn: DataFrame, rounds: Int = LpaRounds): DataFrame = {
-    val parent = edgesIn.sparkSession
-    val ss = parent.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions",
-      graft.util.LoopWidth.forRelation(edgesIn).toString)
-    val e = edgesIn.select("src", "dst")
-    val out = lpaLoop(
-      org.apache.spark.sql.graftaccess.ReHome(ss, e), rounds)
-    org.apache.spark.sql.graftaccess.ReHome(parent, out)
-  }
+  def labelPropagation(edgesIn: DataFrame, rounds: Int = LpaRounds): DataFrame =
+    Fixpoint.run("labelPropagation", edgesIn.select("src", "dst")) { in =>
+      lpaLoop(in.head, rounds)
+    }
 
-  private def lpaLoop(edgesIn: DataFrame, rounds: Int): DataFrame = {
+  private def lpaLoop(edgesIn: DataFrame, rounds: Int): (DataFrame, Int) = {
     val s = edgesIn.sparkSession
     import s.implicits._
     val edges = graft.util.Eager.cached(edgesIn.repartition($"src"))
@@ -752,15 +708,11 @@ object Graph {
       // asymmetric edge list a source-only node leaves `next` and a
       // sink-only one enters it, and either null side vetoes the exit.
       // One node-cardinality join + take(1), far below one edge-scale round.
-      if (r < rounds) {
-        fixed = next
-          .join(labels.withColumnRenamed("lbl", "old"), Seq("node"), "full_outer")
-          .filter($"lbl".isNull || $"old".isNull || $"lbl" =!= $"old").isEmpty
-      }
+      if (r < rounds) fixed = Fixpoint.same(next, labels, "node", "lbl")
       labels = next
       r += 1
     }
-    labels
+    (labels, r - 1)
   }
 
   /** lp01 — communities of the supplier co-supply decile graph (tc01/kc01's

@@ -30,7 +30,7 @@ object Spread {
     val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // exact planned partition count, driver-side only (compiles the plan,
     // runs no job) — split-count estimates from stats would repeat the
-    // LoopWidth join-estimate trap on non-scan inputs
+    // join-estimate trap of Fixpoint.width on non-scan inputs
     if (df.rdd.getNumPartitions >= width) df
     else df.repartition(width, key)
   }

@@ -6,10 +6,10 @@ import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 /** Move a DataFrame onto another session of the same SparkContext WITHOUT
   * the external-Row round trip.
   *
-  * The iterative loops (pageRank/BFS/k-core/LPA/CC) and the width-sized
-  * one-shot pipelines re-home their inputs/outputs across `newSession`
-  * boundaries so the loop's plans compile under the child session's shuffle
-  * width. The public bridge, `ss.createDataFrame(df.rdd, df.schema)`,
+  * The iterative loops (through `graft.util.Fixpoint.run`) and the
+  * width-sized one-shot pipelines re-home their inputs/outputs across
+  * `newSession` boundaries so the loop's plans compile under the child
+  * session's shuffle width. The public bridge, `ss.createDataFrame(df.rdd, df.schema)`,
   * deserializes every InternalRow into a GenericRowWithSchema and re-encodes
   * it back — measured on pr01's edge-list entry at sf0.1: 5.9 s of executor
   * CPU in the single re-home stage, the loop family's largest per-query CPU

@@ -77,6 +77,23 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  /** Component label of every node by naive union-find on the driver. The
+    * union order keeps the smaller root, so each root IS its component's
+    * minimum, the label min-label propagation converges to.
+    */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    edges.flatMap(e => Seq(e._1, e._2)).distinct.map(n => n -> find(n)).toMap
+  }
+
   test("connected components match a brute-force union-find on random graphs") {
     val edgeGen = for {
       a <- Gen.choose(0L, 11L)
@@ -85,24 +102,23 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
     } yield (math.min(a, b), math.max(a, b))
     (1 to 4).foreach { it =>
       val edges = sample(Gen.listOfN(10, edgeGen), seed = 400 + it).distinct
-      // reference: naive union-find on the driver
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val expected = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        .map(n => n -> find(n)).toMap
-      // min-label find: the canonical root IS the component min by
-      // construction of the union order above
+      val expected = unionFind(edges)
       val got = graft.ops.Dedup.connectedComponents(edges.toDF("a", "b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expected, s"seed ${400 + it}: $edges")
     }
+  }
+
+  test("connected components stay exact past 20 rounds on a long path") {
+    // path 2–3–…–25–1: ids rise away from the minimum, so pointer jumping
+    // never skips ahead and label 1 moves one hop per round. A loop capped
+    // at 20 rounds left nodes 2–5 labeled 2.
+    val edges = (2L to 24L).map(i => (i, i + 1)) :+ ((25L, 1L))
+    val got = graft.ops.Dedup.connectedComponents(edges.toDF("a", "b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == unionFind(edges))
+    val rounds = graft.util.Fixpoint.lastRounds("connectedComponents")
+    assert(rounds > 20, s"the path needs more than 20 rounds, ran $rounds")
   }
 
   test("A11 CFR bounded in [0,100] when deaths <= cases") {

@@ -3,6 +3,7 @@ package graft.ops
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.util.Fixpoint
 
 /** PageRank math pinned by hand on tiny graphs, then the distributed
   * invariants (merge-order freedom, mass bound) and the gated query's
@@ -59,8 +60,8 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       (2L, 3L), (3L, 2L), (3L, 0L), (0L, 3L))
     val s = scoresOf(edges, Graph.Iters)
     assert(s == (0L to 3L).map(_ -> 250000000000L).toMap)
-    assert(Graph.lastExecutedRounds == 4,
-      s"expected early exit after 4 rounds, executed ${Graph.lastExecutedRounds}")
+    assert(Fixpoint.lastRounds("pageRank") == 4,
+      s"expected early exit after 4 rounds, executed ${Fixpoint.lastRounds("pageRank")}")
   }
 
   test("shifting node sets match the exact unroll (probe must not misfire)") {
@@ -112,6 +113,9 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
 
   test("BFS on a path: exact hop counts from one end") {
     assert(hopsOf(path, Seq(1L)) == Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 3))
+    // early exit: rounds 1-3 reach 2, 3 and 4; round 4's frontier is
+    // empty, so 4 of the 6 rounds run
+    assert(Fixpoint.lastRounds("bfsHops") == 4)
   }
 
   test("BFS hop bound truncates the reach") {
@@ -197,6 +201,9 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     // 1-2-3 triangle, chain 3-4-5: 5 peels first, then 4 — a 2-round cascade
     val e = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
     assert(coreOf(e, k = 2) == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
+    // early exit: round 3 keeps all three survivors, a fixpoint, so 3 of
+    // the 8 rounds run
+    assert(Fixpoint.lastRounds("kCore") == 3)
   }
 
   test("2-core of a path is empty (full cascade to nothing)") {
@@ -294,6 +301,8 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     val got = lpaOf(Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L),
       (5L, 6L), (3L, 4L)))
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 3L, 5L -> 3L, 6L -> 3L))
+    // early exit: r4 repeats r3, so the round-4 probe stops at 4 of 5
+    assert(Fixpoint.lastRounds("labelPropagation") == 4)
   }
 
   test("LPA bounded-round contract: an oscillating pair reports the round-R state") {
@@ -347,6 +356,33 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     byCommunity.foreach { case (lbl, members) =>
       members.foreach(r => assert(r.getLong(2) == members.length,
         s"community $lbl size column disagrees with the actual member count"))
+    }
+  }
+
+  // ---------------------------------------------------------------------
+  // shared loop edges: connected components' exit, empty inputs
+  // ---------------------------------------------------------------------
+
+  test("CC early exit: a single edge stops at round 2, the first that lowers no label") {
+    import spark.implicits._
+    val comps = Dedup.connectedComponents(Seq((1L, 2L)).toDF("a", "b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(comps == Map(1L -> 1L, 2L -> 1L))
+    assert(Fixpoint.lastRounds("connectedComponents") == 2)
+  }
+
+  test("every loop returns zero rows with its declared columns on an empty edge list") {
+    import spark.implicits._
+    val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val sources = Seq.empty[Long].toDF("node")
+    for ((out, cols) <- Seq(
+        Graph.pageRank(edges) -> Seq("node", "score"),
+        Graph.bfsHops(edges, sources) -> Seq("node", "hops"),
+        Graph.kCore(edges) -> Seq("node", "core_deg"),
+        Graph.labelPropagation(edges) -> Seq("node", "lbl"),
+        Dedup.connectedComponents(edges.toDF("a", "b")) -> Seq("id", "comp"))) {
+      assert(out.columns.toSeq == cols)
+      assert(out.count() == 0L, cols.mkString(", "))
     }
   }
 }

@@ -4,13 +4,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 
-/** The iterative loops (pageRank, bfsHops, connectedComponents) size their
-  * child-session shuffle width from the loop relation's optimizer stats —
-  * the round-5 fix for constants that stayed 8-wide at any scale. The width
-  * must: keep the tuned floor for small candidate graphs, grow with relation
-  * bytes, and never exceed the parent session's configured parallelism. And
-  * the width must be a pure performance knob: results are bit-identical at
-  * any width (fixed-point associative arithmetic).
+/** Every iterative loop run through [[Fixpoint.run]] sizes its
+  * child-session shuffle width with [[Fixpoint.width]], from the loop
+  * relation's optimizer stats, instead of a constant that stays 8-wide at
+  * any scale. The width must: keep the floor for small candidate graphs,
+  * grow with relation bytes, and never exceed the parent session's
+  * configured parallelism. And the width must be a pure performance knob:
+  * results are bit-identical at any width (fixed-point associative
+  * arithmetic).
   */
 class LoopWidthSpec extends AnyFunSuite with SparkSpec {
 
@@ -22,14 +23,14 @@ class LoopWidthSpec extends AnyFunSuite with SparkSpec {
 
   test("small relations keep the floor width") {
     val ss = session(64)
-    assert(LoopWidth.forRelation(ss.range(10).toDF()) == 8)
+    assert(Fixpoint.width(ss.range(10).toDF()) == 8)
   }
 
   test("width grows with relation size and caps at the parent width") {
     val ss = session(64)
-    val small = LoopWidth.forRelation(ss.range(1000).toDF(),
+    val small = Fixpoint.width(ss.range(1000).toDF(),
       floor = 1, bytesPerPartition = 1024)
-    val big = LoopWidth.forRelation(ss.range(100000).toDF(),
+    val big = Fixpoint.width(ss.range(100000).toDF(),
       floor = 1, bytesPerPartition = 1024)
     assert(small < big, s"width must scale with stats: $small !< $big")
     assert(big == 64, "a loop never out-fans its parent session")
@@ -37,7 +38,7 @@ class LoopWidthSpec extends AnyFunSuite with SparkSpec {
 
   test("a parent narrower than the floor bounds the floor too") {
     val ss = session(2)
-    assert(LoopWidth.forRelation(ss.range(10).toDF()) == 2)
+    assert(Fixpoint.width(ss.range(10).toDF()) == 2)
   }
 
   test("loop results are bit-identical regardless of derived width") {
