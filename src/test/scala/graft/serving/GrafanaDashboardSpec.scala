@@ -3,7 +3,7 @@ package graft.serving
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, WhoFixture}
 import graft.etl.EtlJob
 import graft.queries.DerivedTables
 
@@ -13,6 +13,10 @@ import graft.queries.DerivedTables
   * AND every panel's embedded SQL executed against the engine's serving
   * tables with the result proven identical to the corresponding panel
   * function (the artifact can never drift from the gated semantics).
+  *
+  * The panel tests compare two computations over the same data, so they read
+  * the reference CSVs when mounted and otherwise the FIXTURES.md §A-shaped
+  * trio [[graft.WhoFixture]] writes.
   */
 class GrafanaDashboardSpec extends AnyFunSuite with SparkSpec {
 
@@ -27,9 +31,10 @@ class GrafanaDashboardSpec extends AnyFunSuite with SparkSpec {
     try mapper.readTree(in) finally in.close()
   }
 
+  private lazy val dataDir = WhoFixture.dir(referenceDataDir)
   private lazy val covid = EtlJob.prepareCovid(
-    EtlJob.readWhoCovid(spark, s"$referenceDataDir/WHO-COVID-19-global-data.csv"))
-  private lazy val star = EtlJob.run(spark, referenceDataDir)
+    EtlJob.readWhoCovid(spark, s"$dataDir/WHO-COVID-19-global-data.csv"))
+  private lazy val star = EtlJob.run(spark, dataDir)
   private lazy val population =
     Seq(("FR", 2023, 68000000L), ("DE", 2023, 83000000L), ("IT", 2023, 59000000L))
       .toDF("country_code", "year", "population")

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkSpec, Warehouse}
+import graft.{SparkSpec, Warehouse, WhoFixture}
 import graft.etl.EtlJob
 
 /** Serving over a tiny WHO-shaped CSV trio written here, so it runs without
@@ -52,33 +52,24 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
 
   private lazy val dataDir: Path = {
     val dir = Files.createTempDirectory("serve-fixture")
-    def write(name: String, lines: Seq[String]): Unit =
-      Files.write(dir.resolve(name), lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
     val first = java.time.LocalDate.parse("2023-01-01") // a Sunday, like the WHO feed
-    write("WHO-COVID-19-global-data.csv",
-      "Date_reported,Country_code,Country,WHO_region,New_cases,Cumulative_cases,New_deaths,Cumulative_deaths" +:
-        (for { (cc, c) <- codes.zipWithIndex; w <- 0 until weeks } yield {
-          val (code, name, region) = cc
-          val cum = (0 to w).flatMap(cases(c, _)).sum
-          val cumD = (0 to w).flatMap(deaths(c, _)).sum
-          s"${first.plusDays(7L * w)},$code,$name,$region,${cases(c, w).getOrElse("")},$cum," +
-            s"${deaths(c, w).getOrElse("")},$cumD"
-        }))
-    write("vaccination-data.csv", Seq(
-      "COUNTRY,ISO3,WHO_REGION,DATA_SOURCE,DATE_UPDATED,TOTAL_VACCINATIONS," +
-        "PERSONS_VACCINATED_1PLUS_DOSE,TOTAL_VACCINATIONS_PER100," +
-        "PERSONS_VACCINATED_1PLUS_DOSE_PER100,PERSONS_LAST_DOSE,PERSONS_LAST_DOSE_PER100," +
-        "VACCINES_USED,FIRST_VACCINE_DATE,NUMBER_VACCINES_TYPES_USED," +
-        "PERSONS_BOOSTER_ADD_DOSE,PERSONS_BOOSTER_ADD_DOSE_PER100",
-      "France,FRA,EURO,REPORTING,2023-02-01,1.5E6,1000000,20.5,15.1,900000,13.2,,2021-01-01,2,,",
-      "  GERMANY ,DEU,EURO,REPORTING,2023-02-01,2.296475E7,20000000,80.1,70.2,19000000,60.3," +
-        "\"Alpha, Beta\",2021-01-02,2,,",
-      "Brazil,BRA,AMRO,REPORTING,2023-02-01,3.0E5,250000,1.5,1.2,200000,1.0,,2021-02-01,1,,"))
-    write("vaccination-metadata.csv", Seq(
-      "ISO3,PRODUCT_NAME,VACCINE_NAME,COMPANY_NAME,AUTHORIZATION_DATE,START_DATE,END_DATE,COMMENT,DATA_SOURCE",
-      "DEU,Alpha-1,Alpha,AlphaCo,2020-12-01,2020-12-20,,,REPORTING",
-      "DEU,Beta-1,Beta,BetaCo,2020-12-01,2020-12-20,,,REPORTING",
-      "FRA,Alpha-1,Alpha,AlphaCo,2020-12-01,2020-12-20,,,REPORTING"))
+    WhoFixture.write(dir,
+      covid = for { (cc, c) <- codes.zipWithIndex; w <- 0 until weeks } yield {
+        val (code, name, region) = cc
+        val cum = (0 to w).flatMap(cases(c, _)).sum
+        val cumD = (0 to w).flatMap(deaths(c, _)).sum
+        s"${first.plusDays(7L * w)},$code,$name,$region,${cases(c, w).getOrElse("")},$cum," +
+          s"${deaths(c, w).getOrElse("")},$cumD"
+      },
+      vaccination = Seq(
+        "France,FRA,EURO,REPORTING,2023-02-01,1.5E6,1000000,20.5,15.1,900000,13.2,,2021-01-01,2,,",
+        "  GERMANY ,DEU,EURO,REPORTING,2023-02-01,2.296475E7,20000000,80.1,70.2,19000000,60.3," +
+          "\"Alpha, Beta\",2021-01-02,2,,",
+        "Brazil,BRA,AMRO,REPORTING,2023-02-01,3.0E5,250000,1.5,1.2,200000,1.0,,2021-02-01,1,,"),
+      metadata = Seq(
+        "DEU,Alpha-1,Alpha,AlphaCo,2020-12-01,2020-12-20,,,REPORTING",
+        "DEU,Beta-1,Beta,BetaCo,2020-12-01,2020-12-20,,,REPORTING",
+        "FRA,Alpha-1,Alpha,AlphaCo,2020-12-01,2020-12-20,,,REPORTING"))
     dir
   }
 
@@ -89,15 +80,9 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
   override def afterAll(): Unit = {
     try server.stop(0)
     finally {
-      if (Files.exists(dataDir)) deleteTree(dataDir)
+      if (Files.exists(dataDir)) WhoFixture.deleteTree(dataDir)
       super.afterAll()
     }
-  }
-
-  private def deleteTree(p: Path): Unit = {
-    val s = Files.walk(p)
-    try s.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    finally s.close()
   }
 
   private def request(method: String, path: String, body: Option[String] = None): (Int, String) = {
@@ -305,7 +290,7 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
     assert(recorded("/api/total_vaccines") ==
       s"""[{"total_reported_shots":${1500000L + 2 * 22964750L + 300000L}}]""")
 
-    deleteTree(dataDir)
+    WhoFixture.deleteTree(dataDir)
     assert(!Files.exists(dataDir))
     for (r <- readRoutes) assert(get(r) == (200 -> recorded(r)), r)
   }

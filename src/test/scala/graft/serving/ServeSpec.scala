@@ -3,9 +3,11 @@ package graft.serving
 import java.net.{HttpURLConnection, URI}
 import scala.io.Source
 
+import com.sun.net.httpserver.HttpServer
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, WhoFixture}
 import graft.etl.EtlJob
 
 /** The HTTP shell must return exactly what the underlying DataFrame
@@ -15,17 +17,33 @@ import graft.etl.EtlJob
   * (data.py:172-178), the top5 two-list summary, path-parameterized
   * graph/table routes, the forecast + metrics ML surfaces, and the Swagger
   * CRUD app's create→read→update→delete lifecycle (api/api_crud.py).
+  *
+  * None of these contracts depends on what the WHO data holds, so the star
+  * is built from the reference CSVs when they are mounted and otherwise from
+  * the FIXTURES.md §A-shaped trio [[graft.WhoFixture]] writes. The
+  * `model=lstm` test also needs the committed LSTM checkpoint and label
+  * encoder, which only the reference mount provides.
   */
-class ServeSpec extends AnyFunSuite with SparkSpec {
+class ServeSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
 
-  lazy val star = EtlJob.run(spark, referenceDataDir)
+  lazy val star = EtlJob.run(spark, WhoFixture.dir(referenceDataDir))
   lazy val population = {
     import spark.implicits._
     Seq(("FR", 2023, 68000000L), ("DE", 2023, 83000000L))
       .toDF("country_code", "year", "population")
   }
-  lazy val server = Serve.start(star, port = 0, population = Some(population))
   lazy val agg = graft.queries.ServingQueries.factAggregates(star)
+  @volatile private var started: Option[HttpServer] = None
+  lazy val server = {
+    val s = Serve.start(star, port = 0, population = Some(population))
+    started = Some(s)
+    s
+  }
+
+  // stops the server only if a test started it
+  override def afterAll(): Unit =
+    try started.foreach(_.stop(0))
+    finally super.afterAll()
 
   private def request(method: String, path: String, body: Option[String] = None): (Int, String) = {
     val url = URI.create(
