@@ -56,8 +56,33 @@ import graft.queries.ServingQueries.FactAggregates
   * The served star is immutable (no CRUD route writes to it), so the
   * aggregates never need invalidating. They are not registered in the
   * catalog, so `/api/table/<name>` still serves only the six star tables.
-  * The evolution routes (`covid_cases_evolution`, `vaccinations_evolution`)
-  * still aggregate a fact per request.
+  *
+  * Repeat reads run no Spark job. The answer of a memoized route is a pure
+  * function of the stored star, the stored aggregates, the weekly fact's row
+  * count and the request's parameters, all fixed once `start` returns. So
+  * its response body is stored, by route path plus decoded query parameters
+  * in sorted order ([[BodyMemo]]), and a repeat request writes the stored
+  * bytes with the same status and `Content-Type`. A miss runs the route as
+  * it always ran and holds no lock while it does. Memoized:
+  *  - every route of [[routes]] and [[dataRoutes]], the evolution routes
+  *    included, which therefore aggregate a fact once per key per server;
+  *  - `weekly_statistics_total`, for valid parameters;
+  *  - `top5_summary`;
+  *  - `graph/country/<metric>`: its 200 bodies and its `no data for
+  *    country` 404, which the data decides.
+  * Not memoized, because their answer is not a function of the stored star:
+  *  - `table/<name>` reads the session catalog, which any caller can
+  *    re-register;
+  *  - `country_covid_rates` reads the caller's `population` DataFrame;
+  *  - `metrics`, `predict_cases` and `predicted_weekly_statistics` fit or
+  *    read models; the last is already one bounded job per request, which
+  *    ServeSpec pins;
+  *  - `encoding` probes the live catalog, `/health` the server, and the
+  *    CRUD paths read tables that writes change;
+  *  - no 400 or 500 answer is stored.
+  * The memo holds at most [[MemoBudgetBytes]] (64 MiB) of body bytes plus
+  * key characters, fixed in code; an insert that would exceed it clears the
+  * memo first, and a larger body is served but not stored.
   *
   * Requests run on a pool of daemon dispatcher threads sized to the
   * session's `defaultParallelism`, so concurrent clients overlap instead of
@@ -77,6 +102,19 @@ object Serve {
   private val M = new ObjectMapper()
   private def jstr(s: String): String = M.writeValueAsString(s)
   private def err(msg: String): String = s"""{"error":${jstr(msg)}}"""
+
+  /** One `/api` answer: its status and JSON body. */
+  private final case class Answer(status: Int, body: String)
+
+  /** A parameter the route cannot use: answered 400 with its message. */
+  private final class BadRequest(msg: String) extends Exception(msg)
+
+  private def positiveInt(params: Map[String, String], name: String, default: Int): Int =
+    params.get(name).fold(default)(v => v.toIntOption.filter(_ >= 1)
+      .getOrElse(throw new BadRequest(s"$name must be an integer >= 1, got '$v'")))
+
+  /** The response memo's budget: UTF-8 body bytes plus key characters. */
+  private[serving] val MemoBudgetBytes: Long = 64L << 20
 
   /** Plain-array routes (the reference's `fetch_data` shape,
     * app/routes/data.py:63-106, 180-214): per-table scans + totals +
@@ -123,8 +161,12 @@ object Serve {
       .collect { case Array(k, v) => k -> java.net.URLDecoder.decode(v, "UTF-8") }
       .toMap
 
-  private def respond(ex: HttpExchange, status: Int, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
+  private def utf8(body: String): Array[Byte] = body.getBytes(StandardCharsets.UTF_8)
+
+  private def respond(ex: HttpExchange, status: Int, body: String): Unit =
+    respond(ex, status, utf8(body))
+
+  private def respond(ex: HttpExchange, status: Int, bytes: Array[Byte]): Unit = {
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(status, bytes.length.toLong)
     try ex.getResponseBody.write(bytes)
@@ -178,7 +220,13 @@ object Serve {
     *   `{"error": …}` envelope the reference produces for the missing table.
     */
   def start(star: StarSchema, port: Int,
-      population: Option[DataFrame] = None): HttpServer = {
+      population: Option[DataFrame] = None): HttpServer =
+    serve(star, port, population)._1
+
+  /** [[start]], also returning the server's response memo, which the
+    * serving specs inspect. */
+  private[serving] def serve(star: StarSchema, port: Int,
+      population: Option[DataFrame]): (HttpServer, BodyMemo) = {
     val served = star.materialized
     val spark = served.country.sparkSession
     Warehouse.register(spark, served)
@@ -233,23 +281,36 @@ object Serve {
 
     val arr = routes(served, agg)
     val env = dataRoutes(served, agg)
+    val memo = new BodyMemo(MemoBudgetBytes)
+    def memoized(path: String): Boolean =
+      arr.contains(path) || env.contains(path) || path == "/api/weekly_statistics_total" ||
+        path == "/api/top5_summary" || path.startsWith("/api/graph/country/")
 
     server.createContext("/api", (ex: HttpExchange) => {
       val path = ex.getRequestURI.getPath
-      try {
-        (arr.get(path), env.get(path)) match {
-          case (Some(fn), _) => respond(ex, 200, jsonArray(fn(queryParams(ex))))
-          case (_, Some(fn)) =>
-            respond(ex, 200, s"""{"data":${jsonArray(fn(queryParams(ex)))}}""")
-          case _ => handleSpecial(ex, path, served, agg, factRows, spark, population,
-            () => predicted, () => metricsJson, rfModelFor)
+      val (status, body) = try {
+        val params = queryParams(ex)
+        val key = if (memoized(path)) Some(BodyMemo.key(path, params)) else None
+        key.flatMap(memo.get).getOrElse {
+          val a = (arr.get(path), env.get(path)) match {
+            case (Some(fn), _) => Answer(200, jsonArray(fn(params)))
+            case (_, Some(fn)) => Answer(200, s"""{"data":${jsonArray(fn(params))}}""")
+            case _ => handleSpecial(path, params, served, agg, factRows, spark, population,
+              () => predicted, () => metricsJson, rfModelFor)
+          }
+          val answer = (a.status, utf8(a.body))
+          // 400 and 500 answers are never stored; 404 is graph's data-derived one
+          if (a.status == 200 || a.status == 404) key.foreach(memo.put(_, answer))
+          answer
         }
       } catch {
+        case e: BadRequest => (400, utf8(err(e.getMessage)))
         case e: NoSuchElementException =>
-          respond(ex, 400, err(s"missing parameter: ${e.getMessage}"))
+          (400, utf8(err(s"missing parameter: ${e.getMessage}")))
         case e: Exception =>
-          respond(ex, 500, err(Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
+          (500, utf8(err(Option(e.getMessage).getOrElse(e.getClass.getSimpleName))))
       }
+      respond(ex, status, body)
     })
 
     server.createContext("/country_statistics", (ex: HttpExchange) =>
@@ -280,7 +341,7 @@ object Serve {
     pool.allowCoreThreadTimeOut(true)
     server.setExecutor(pool)
     server.start()
-    server
+    (server, memo)
   }
 
   /** OpenAPI 3 description of the CRUD tables (the reference's Swagger
@@ -327,56 +388,59 @@ object Serve {
 
   /** Routes with bespoke envelopes or path parameters. */
   private def handleSpecial(
-      ex: HttpExchange, path: String, star: StarSchema, agg: FactAggregates,
+      path: String, p: Map[String, String], star: StarSchema, agg: FactAggregates,
       factRows: Long, spark: SparkSession,
       population: Option[DataFrame], predicted: () => DataFrame,
       metricsJson: () => String,
       rfModelFor: String => org.apache.spark.ml.regression.RandomForestRegressionModel,
-  ): Unit = path match {
+  ): Answer = path match {
 
     // pagination envelope (data.py:108-178)
     case "/api/weekly_statistics_total" =>
-      val p = queryParams(ex)
-      val page = p.getOrElse("page", "1").toInt
-      val limit = p.getOrElse("limit", "100").toInt
+      val page = positiveInt(p, "page", 1)
+      val limit = positiveInt(p, "limit", 100)
       val totalPages = math.ceil(factRows.toDouble / limit).toInt
-      val data = jsonArray(ServingQueries.weeklyStatisticsTotal(star, agg, page, limit))
-      respond(ex, 200,
+      // a page at or past the fact's end is empty; this also keeps Spark's
+      // Int offset from overflowing on a fact of fewer than 2^31 rows
+      val data =
+        if ((page - 1).toLong * limit >= factRows) "[]"
+        else jsonArray(ServingQueries.weeklyStatisticsTotal(star, agg, page, limit))
+      Answer(200,
         s"""{"page":$page,"limit":$limit,"total_pages":$totalPages,"total_rows":$factRows,"data":$data}""")
 
     // two-list summary (data.py:271-298)
     case "/api/top5_summary" =>
-      respond(ex, 200,
+      Answer(200,
         s"""{"top5_deaths":${jsonArray(ServingQueries.top5Deaths(agg))},"top5_cases":${jsonArray(ServingQueries.top5Cases(agg))}}""")
 
     case "/api/country_covid_rates" =>
       population match {
-        case Some(pop) => respond(ex, 200,
+        case Some(pop) => Answer(200,
           s"""{"data":${jsonArray(ServingQueries.countryCovidRates(star, pop))}}""")
         case None => // the reference's own fate: the population table doesn't exist
-          respond(ex, 500, err("relation \"population\" does not exist"))
+          Answer(500, err("relation \"population\" does not exist"))
       }
 
     // forecast-output table (data.py:63-65; intended semantics, §1.4)
     case "/api/predicted_weekly_statistics" =>
-      respond(ex, 200, jsonArray(predicted()))
+      Answer(200, jsonArray(predicted()))
 
     // RF model metrics (app/routes/metrics.py:23-41)
     case "/api/metrics" =>
-      respond(ex, 200, metricsJson())
+      Answer(200, metricsJson())
 
     // encoding probe (app/main.py:20-31): the reference asks Postgres for
     // server/client encodings; a parquet warehouse is UTF-8 by format spec —
     // listTables() is the live-catalog probe standing in for conn.connect()
     case "/api/encoding" =>
       Warehouse.listTables(spark) // throws if the catalog is gone → 500
-      respond(ex, 200, """{"server_encoding":"UTF8","client_encoding":"UTF8"}""")
+      Answer(200, """{"server_encoding":"UTF8","client_encoding":"UTF8"}""")
 
     // per-country metric series (graph.py:10-52): /api/graph/country/<metric>
     case _ if path.startsWith("/api/graph/country/") =>
       val metric = path.stripPrefix("/api/graph/country/")
-      queryParams(ex).get("country") match {
-        case None => respond(ex, 400, err("missing parameter: country"))
+      p.get("country") match {
+        case None => Answer(400, err("missing parameter: country"))
         case Some(country) =>
           // reference METRIC_MAP keys (graph.py:10-14); "vaccinated" is its
           // daily-shots series (the mapped columns don't exist — intended
@@ -388,13 +452,12 @@ object Serve {
             case _            => None
           }
           mapped match {
-            case None => respond(ex, 400, err(s"unknown metric: $metric"))
+            case None => Answer(400, err(s"unknown metric: $metric"))
             case Some(m) =>
               val rows = Warehouse.jsonRecords(
                 ServingQueries.graphCountry(star, country, m)).collect()
-              if (rows.isEmpty)
-                respond(ex, 404, err(s"no data for country '$country'"))
-              else respond(ex, 200, s"""{"data":${rows.mkString("[", ",", "]")}}""")
+              if (rows.isEmpty) Answer(404, err(s"no data for country '$country'"))
+              else Answer(200, s"""{"data":${rows.mkString("[", ",", "]")}}""")
           }
       }
 
@@ -403,10 +466,10 @@ object Serve {
       val name = path.stripPrefix("/api/table/")
       try {
         val body = jsonArray(Warehouse.tableScan(spark, name, limit = 100))
-        respond(ex, 200, s"""{${jstr(name)}:$body}""")
+        Answer(200, s"""{${jstr(name)}:$body}""")
       } catch {
         case e: IllegalArgumentException =>
-          respond(ex, 500, err(s"cannot fetch table '$name': ${e.getMessage}"))
+          Answer(500, err(s"cannot fetch table '$name': ${e.getMessage}"))
       }
 
     // autoregressive forecast (predict_france_with_model.py:54-113).
@@ -414,25 +477,31 @@ object Serve {
     // `model=lstm`, which serves the reference's own committed LSTM weights
     // (pure-JVM forward pass, ml/Lstm.scala) over a daily owid-shaped feed.
     case "/api/predict_cases" =>
-      val p = queryParams(ex)
       (p.get("country"), p.get("start_date")) match {
         case (Some(country), Some(startDate)) if p.get("model").contains("lstm") =>
           val days = math.min(p.getOrElse("days", "30").toInt, 104)
           // the reference's input CSV (owid-covid-data.csv) is a missing
           // large blob in its own repo, so the feed location is a deploy
           // concern: point SPARK_GRAFT_OWID_CSV at any owid-shaped CSV
+          val weights = Seq(
+            "SPARK_GRAFT_LSTM_PTH" -> graft.ml.Lstm.ModelPath,
+            "SPARK_GRAFT_LSTM_ENCODER" -> graft.ml.Lstm.EncoderPath)
+          val missing = weights.filterNot { case (_, f) => new java.io.File(f).isFile }
           sys.props.get("graft.owid.csv").orElse(sys.env.get("SPARK_GRAFT_OWID_CSV")) match {
             case None =>
-              respond(ex, 503, err("LSTM feed not configured: set " +
+              Answer(503, err("LSTM feed not configured: set " +
                 "SPARK_GRAFT_OWID_CSV to an owid-shaped CSV " +
                 "(the reference's owid-covid-data.csv is not committed); " +
                 "SPARK_GRAFT_LSTM_PTH / SPARK_GRAFT_LSTM_ENCODER point at " +
                 "the checkpoint + label encoder if the reference checkout " +
                 "is not mounted"))
+            case Some(_) if missing.nonEmpty =>
+              Answer(503, err("LSTM weights not configured: " +
+                missing.map { case (v, f) => s"$f does not exist (set $v)" }.mkString("; ")))
             case Some(csv) =>
               val classes = graft.ml.Lstm.referenceClasses
               val countryId = classes.indexOf(country)
-              if (countryId < 0) respond(ex, 400, err(s"unknown country: $country"))
+              if (countryId < 0) Answer(400, err(s"unknown country: $country"))
               else {
                 val prepared = graft.ml.Lstm.prepareOwid(
                   graft.etl.EtlJob.readOwid(spark, csv), classes.toSet)
@@ -450,12 +519,11 @@ object Serve {
                 val startIdx =
                   if (isoStart == null) -1 else dates.indexWhere(_ >= isoStart)
                 if (isoStart == null)
-                  respond(ex, 400, err(s"unparsable start_date: $startDate"))
+                  Answer(400, err(s"unparsable start_date: $startDate"))
                 else if (hist.length < graft.ml.Lstm.Lookback)
-                  respond(ex, 400, err(s"too little data for $country"))
+                  Answer(400, err(s"too little data for $country"))
                 else if (startIdx < 0 || startIdx < graft.ml.Lstm.Lookback)
-                  respond(ex, 400,
-                    err(s"invalid or insufficient start_date for $country"))
+                  Answer(400, err(s"invalid or insufficient start_date for $country"))
                 else {
                   val lastKnown = java.time.LocalDate.parse(dates(startIdx - 1))
                   val preds = graft.ml.Lstm.predictCases(
@@ -464,7 +532,7 @@ object Serve {
                   val items = preds.zipWithIndex.map { case (v, i) =>
                     s"""{"date":"${lastKnown.plusDays(i + 1L)}","predicted_cases":${v.toLong}}"""
                   }
-                  respond(ex, 200,
+                  Answer(200,
                     s"""{"country":${jstr(country)},"start_date":${jstr(startDate)},"days":$days,"predictions":${items.mkString("[", ",", "]")}}""")
                 }
               }
@@ -473,7 +541,7 @@ object Serve {
           val days = math.min(p.getOrElse("days", "30").toInt, 104)
           parseLooseDate(startDate) match {
             case None =>
-              respond(ex, 400, err(s"unparsable start_date: $startDate"))
+              Answer(400, err(s"unparsable start_date: $startDate"))
             case Some(cutoff) =>
               val iso = cutoff.toString
               // ONE Spark action per warm request (the round-9 LSTM
@@ -492,8 +560,7 @@ object Serve {
                 .map(r => (r.getDate(0), r.getDouble(1)))
                 .sortBy(_._1.getTime)
               if (hist.length < Forecast.NumLags)
-                respond(ex, 400,
-                  err(s"too little data for $country before $startDate"))
+                Answer(400, err(s"too little data for $country before $startDate"))
               else {
                 val tail = hist.takeRight(Forecast.NumLags * 2).map(_._2).toSeq
                 val preds = Forecast.autoregressive(rfModelFor(iso), tail, days)
@@ -501,15 +568,15 @@ object Serve {
                 val items = preds.zipWithIndex.map { case (v, i) =>
                   s"""{"date":"${lastKnown.plusDays((i + 1).toLong * 7)}","predicted_cases":${v.round}}"""
                 }
-                respond(ex, 200,
+                Answer(200,
                   s"""{"country":${jstr(country)},"start_date":${jstr(startDate)},"days":$days,"predictions":${items.mkString("[", ",", "]")}}""")
               }
           }
         case _ =>
-          respond(ex, 400, err("parameters 'country' and 'start_date' are required"))
+          Answer(400, err("parameters 'country' and 'start_date' are required"))
       }
 
-    case _ => respond(ex, 404, err("no such route"))
+    case _ => Answer(404, err("no such route"))
   }
 
   /** The Swagger CRUD surface (api/api_crud.py:60-260), both tables:

@@ -21,6 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkSpec, Warehouse, WhoFixture}
 import graft.etl.EtlJob
+import graft.queries.ServingQueries
 
 /** Serving over a tiny WHO-shaped CSV trio written here, so it runs without
   * the reference checkout. The trio carries the FIXTURES.md §A cases the
@@ -32,10 +33,12 @@ import graft.etl.EtlJob
   * Pins the serving topology: `Serve.start` materializes the star once, so
   * every read route keeps answering, byte for byte, after the CSVs are
   * deleted; the routes over its stored fact aggregates answer what
-  * aggregating the star's facts answers, in a bounded number of jobs; and
-  * requests run on a dispatcher pool, so a client slow to send its body
-  * does not hold up the others and concurrent clients each read their own
-  * writes.
+  * aggregating the star's facts answers, in a bounded number of jobs; a
+  * memoized route answers a repeat request with the body computed from the
+  * star and runs no Spark job, within the memo's byte budget, while the
+  * excluded routes and the CRUD reads compute per request; and requests run
+  * on a dispatcher pool, so a client slow to send its body does not hold up
+  * the others and concurrent clients each read their own writes.
   */
 class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
 
@@ -75,7 +78,7 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
 
   /** The ETL's lineage star over the CSVs; `Serve.start` stores its own copy. */
   private lazy val star = EtlJob.run(spark, dataDir.toString)
-  private lazy val server = Serve.start(star, port = 0)
+  private lazy val (server, memo) = Serve.serve(star, port = 0, population = None)
 
   override def afterAll(): Unit = {
     try server.stop(0)
@@ -102,6 +105,81 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
   }
 
   private def get(path: String): (Int, String) = request("GET", path)
+
+  private def queryOf(url: String): Map[String, String] =
+    url.dropWhile(_ != '?').drop(1).split("&").filter(_.nonEmpty)
+      .map(_.split("=", 2)).map(kv => kv(0) -> kv(1)).toMap
+
+  private def url(path: String, params: Map[String, String]): String =
+    if (params.isEmpty) path else params.map { case (k, v) => s"$k=$v" }.mkString(s"$path?", "&", "")
+
+  /** The Spark jobs and SQL queries (call site and physical plan) that
+    * `body` starts. */
+  private def sparkWork(body: => Unit): (Int, Seq[String]) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val queries = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case q: SparkListenerSQLExecutionStart =>
+          queries.add(s"${q.description}: ${q.physicalPlanDescription.take(200)}"); ()
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      GraftSparkAccess.drainListenerBus(sc)
+      (jobs.get(), queries.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def array(df: DataFrame): String =
+    Warehouse.jsonRecords(df).collect().mkString("[", ",", "]")
+
+  /** What a memoized route answers, computed straight from the lineage star
+    * and its unstored aggregates. */
+  private def direct(path: String, params: Map[String, String]): (Int, String) = {
+    val routes = Serve.routes(star)
+    val data = Serve.dataRoutes(star)
+    path match {
+      case _ if routes.contains(path) => 200 -> array(routes(path)(params))
+      case _ if data.contains(path) => 200 -> s"""{"data":${array(data(path)(params))}}"""
+      case "/api/weekly_statistics_total" =>
+        val page = params.getOrElse("page", "1").toInt
+        val limit = params.getOrElse("limit", "100").toInt
+        val rows = star.weeklyStatistics.count()
+        200 -> (s"""{"page":$page,"limit":$limit,"total_pages":${(rows + limit - 1) / limit},""" +
+          s""""total_rows":$rows,"data":${array(ServingQueries.weeklyStatisticsTotal(star, page, limit))}}""")
+      case "/api/top5_summary" =>
+        200 -> (s"""{"top5_deaths":${array(ServingQueries.top5Deaths(star))},""" +
+          s""""top5_cases":${array(ServingQueries.top5Cases(star))}}""")
+      case _ =>
+        val metric = path.stripPrefix("/api/graph/country/")
+        val country = params("country")
+        val rows = array(ServingQueries.graphCountry(star, country,
+          if (metric == "vaccinated") "vaccinations" else metric))
+        if (rows == "[]") 404 -> s"""{"error":"no data for country '$country'"}"""
+        else 200 -> s"""{"data":$rows}"""
+    }
+  }
+
+  /** Every memoized route, with several parameter values: known and unknown
+    * countries, the default, a middle, the last and a past-the-end page. */
+  private def memoizedRequests: Seq[(String, Map[String, String])] =
+    (Serve.routes(star).keys ++ Serve.dataRoutes(star).keys).toSeq.sorted.flatMap { p =>
+      if (p.endsWith("/weekly_statistics_by_country"))
+        Seq("FR", "DE", "XA", "ZZ").map(c => p -> Map("country_code" -> c))
+      else Seq(p -> Map.empty[String, String])
+    } ++ Seq(Map.empty[String, String], Map("page" -> "2", "limit" -> "7"),
+      Map("page" -> "9", "limit" -> "7"), Map("page" -> "10", "limit" -> "7"))
+      .map("/api/weekly_statistics_total" -> _) ++
+    Seq("/api/top5_summary" -> Map.empty[String, String]) ++
+    (for { m <- Seq("cases", "deaths", "vaccinated"); c <- Seq("FR", "DE", "XA", "ZZ") }
+      yield s"/api/graph/country/$m" -> Map("country" -> c))
 
   /** Every read route group: plain-array, `{"data": …}`, paged, top-5,
     * graph, `table/<name>`, forecast and RF routes.
@@ -160,13 +238,145 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
     } finally for (k <- Seq("SLOW", "FAST")) request("DELETE", s"/country_statistics/$k")
   }
 
+  test("a memoized route answers its first and repeat requests with the body computed from the star") {
+    val answered = memoizedRequests.map { case (path, params) =>
+      val key = BodyMemo.key(path, params)
+      assert(memo.get(key).isEmpty, s"$key requested before")
+      val first = get(url(path, params))
+      assert(memo.get(key).isDefined, s"$key not stored")
+      val (jobs, _) = sparkWork {
+        assert(get(url(path, params)) == first, s"$key: repeat")
+      }
+      assert(jobs == 0, s"$key: repeat ran $jobs Spark jobs")
+      assert(first == direct(path, params), key)
+      url(path, params) -> first._1
+    }
+    // unknown countries: an empty series and the data-derived graph 404
+    // (XA reports weekly statistics but no vaccinations)
+    assert(answered.filter(_._2 == 404).map(_._1).toSet ==
+      (Seq("cases", "deaths", "vaccinated").map(m => s"/api/graph/country/$m?country=ZZ") :+
+        "/api/graph/country/vaccinated?country=XA").toSet, answered)
+    assert(get(url("/api/weekly_statistics_by_country", Map("country_code" -> "ZZ"))) == (200 -> "[]"))
+    assert(memo.size > 0 && memo.size <= Serve.MemoBudgetBytes)
+  }
+
+  test("routes the memo excludes run their jobs on every request") {
+    for (path <- Seq("/api/table/disease", "/api/table/weekly_statistics",
+        "/api/predicted_weekly_statistics")) {
+      val first = get(path)
+      assert(first._1 == 200, s"$path: $first")
+      for (_ <- 0 until 2) {
+        val (jobs, _) = sparkWork(assert(get(path) == first, path))
+        assert(jobs >= 1, s"$path ran no Spark job")
+      }
+      assert(memo.get(BodyMemo.key(path, Map.empty)).isEmpty, path)
+    }
+    // nor is an unknown metric's or a missing parameter's 400 stored
+    assert(get("/api/graph/country/nonsense?country=FR")._1 == 400)
+    assert(get("/api/weekly_statistics_by_country")._1 == 400)
+    assert(memo.get(BodyMemo.key("/api/graph/country/nonsense", Map("country" -> "FR"))).isEmpty)
+    assert(memo.get(BodyMemo.key("/api/weekly_statistics_by_country", Map.empty)).isEmpty)
+  }
+
+  test("weekly_statistics_total answers 400 to a non-integer, page < 1 or limit < 1") {
+    for (params <- Seq(Map("limit" -> "0"), Map("limit" -> "-1"), Map("page" -> "0"),
+        Map("page" -> "-3"), Map("page" -> "two"), Map("limit" -> "1.5"), Map("limit" -> ""),
+        Map("page" -> "1", "limit" -> "99999999999"))) {
+      for (_ <- 0 until 2) {
+        val (code, body) = get(url("/api/weekly_statistics_total", params))
+        assert(code == 400, s"$params: $body")
+        assert(new ObjectMapper().readTree(body).path("error").asText().contains("must be an integer >= 1"),
+          s"$params: $body")
+      }
+      assert(memo.get(BodyMemo.key("/api/weekly_statistics_total", params)).isEmpty, params)
+    }
+    // a page whose offset overflows an Int is past every row: empty, not a 500
+    val (code, body) = get(s"/api/weekly_statistics_total?page=3&limit=${Int.MaxValue}")
+    assert(code == 200, body)
+    assert(body.endsWith(""""data":[]}"""), body)
+  }
+
+  test("a CRUD GET reads its own write even when the same GET came before it") {
+    for ((base, key, row, upd) <- Seq(
+        ("/country_statistics", "MEMO",
+          """{"country":"MEMO","total_cases":5,"total_vaccinated":0}""", """{"total_cases":6}"""),
+        ("/region_yearly_summary", "MEMO/2021",
+          """{"who_region":"MEMO","year":2021,"total_cases":5,"total_deaths":1}""",
+          """{"total_cases":6}"""))) {
+      val all = get(base)
+      assert(get(s"$base/$key")._1 == 404)
+      assert(request("POST", base, Some(row))._1 == 201)
+      assert(get(s"$base/$key") == (200 -> row))
+      assert(get(base) != all)
+      assert(request("PUT", s"$base/$key", Some(upd))._1 == 200)
+      assert(get(s"$base/$key") == (200 -> row.replace("\"total_cases\":5", "\"total_cases\":6")))
+      assert(request("DELETE", s"$base/$key")._1 == 200)
+      assert(get(s"$base/$key")._1 == 404)
+      assert(get(base) == all)
+    }
+  }
+
+  test("the memo never stores more than its budget") {
+    val budget = 1000L
+    val m = new BodyMemo(budget)
+    val body = Array.fill[Byte](90)('x'.toByte)
+    for (i <- 0 until 100) {
+      val key = BodyMemo.key("/api/graph/country/cases", Map("country" -> s"C$i"))
+      m.put(key, 200 -> body)
+      assert(m.size <= budget, s"after $i inserts: ${m.size}")
+      assert(m.get(key).exists(_._2 sameElements body), key)
+    }
+    // a body larger than the budget is not stored, and evicts nothing
+    val before = m.size
+    m.put("/api/disease?", 200 -> Array.fill[Byte](budget.toInt + 1)('y'.toByte))
+    assert(m.get("/api/disease?").isEmpty)
+    assert(m.size == before)
+    // a repeat insert of a stored key is not counted twice
+    val key = BodyMemo.key("/api/graph/country/cases", Map("country" -> "C99"))
+    m.put(key, 200 -> body)
+    assert(m.size == before)
+    // parameter maps that would print alike have different keys
+    assert(BodyMemo.key("/api/x", Map("a" -> "1&b=2")) != BodyMemo.key("/api/x", Map("a" -> "1", "b" -> "2")))
+  }
+
+  test("predict_cases model=lstm answers 503 naming the missing checkpoint or encoder") {
+    val props = Seq("graft.owid.csv", "graft.lstm.model", "graft.lstm.encoder")
+    val saved = props.map(k => k -> sys.props.get(k))
+    val dir = Files.createTempDirectory("lstm-absent")
+    try {
+      val csv = Files.writeString(dir.resolve("owid.csv"), "iso_code,location,date,new_cases\n")
+      val model = dir.resolve("absent.pth").toString
+      val encoder = dir.resolve("absent.pkl").toString
+      sys.props("graft.owid.csv") = csv.toString
+      sys.props("graft.lstm.model") = model
+      sys.props("graft.lstm.encoder") = encoder
+      val path = "/api/predict_cases?country=France&start_date=2020-05-01&days=3&model=lstm"
+      val (code, body) = get(path)
+      assert(code == 503, body)
+      val msg = new ObjectMapper().readTree(body).path("error").asText()
+      for (named <- Seq("not configured", "SPARK_GRAFT_LSTM_PTH", model,
+          "SPARK_GRAFT_LSTM_ENCODER", encoder))
+        assert(msg.contains(named), s"$named: $body")
+      // only the missing one is named
+      sys.props("graft.lstm.model") = csv.toString
+      val (code2, body2) = get(path)
+      assert(code2 == 503, body2)
+      assert(body2.contains(encoder) && !body2.contains("SPARK_GRAFT_LSTM_PTH"), body2)
+    } finally {
+      saved.foreach {
+        case (k, Some(v)) => sys.props(k) = v
+        case (k, None)    => sys.props.remove(k)
+      }
+      WhoFixture.deleteTree(dir)
+    }
+  }
+
   test("routes over the stored aggregates answer what aggregating the star answers") {
     // the reference bodies aggregate the fixture star's facts directly
     val M = new ObjectMapper()
     val ws = star.weeklyStatistics
     val dv = star.dailyVaccineStatistics
     def records(df: DataFrame): Seq[String] = Warehouse.jsonRecords(df).collect().toSeq
-    def array(df: DataFrame): String = records(df).mkString("[", ",", "]")
     def body(path: String): String = {
       val (code, b) = get(path)
       assert(code == 200, s"$path: $b")
@@ -242,40 +452,26 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
   }
 
   test("warm aggregate routes run at most two jobs; the page runs no count") {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    // one entry per SQL query: its call site and physical plan
-    val queries = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case q: SparkListenerSQLExecutionStart =>
-          queries.add(s"${q.description}: ${q.physicalPlanDescription.take(200)}"); ()
-        case _ =>
-      }
-    }
-    /** The jobs and SQL queries of one warm request. */
-    def warm(path: String): (Int, Seq[String]) = {
-      assert(get(path)._1 == 200, path)
-      jobs.set(0)
-      queries.clear()
-      sc.addSparkListener(listener)
-      try {
-        assert(get(path)._1 == 200, path)
-        GraftSparkAccess.drainListenerBus(sc)
-        (jobs.get(), queries.asScala.toSeq)
-      } finally sc.removeSparkListener(listener)
+    // each measured request is a key not requested before (the `probe`
+    // parameter changes the key, not the answer), so it runs the route;
+    // its repeat is a memo hit
+    def missThenHit(warmPath: String, fresh: String): (Int, Seq[String]) = {
+      assert(get(warmPath)._1 == 200, warmPath)
+      assert(memo.get(BodyMemo.key(fresh.takeWhile(_ != '?'), queryOf(fresh))).isEmpty, fresh)
+      val miss = sparkWork(assert(get(fresh)._1 == 200, fresh))
+      val (hitJobs, _) = sparkWork(assert(get(fresh)._1 == 200, fresh))
+      assert(hitJobs == 0, s"$fresh repeat ran $hitJobs jobs")
+      miss
     }
     for (path <- Seq("/api/top5_summary", "/api/worldmap/cases", "/api/worldmap/deaths",
         "/api/worldmap/vaccinated", "/api/total_cases", "/api/total_deaths",
         "/api/total_vaccines")) {
-      val (n, _) = warm(path)
+      val (n, _) = missThenHit(path, s"$path?probe=jobs")
       assert(n <= 2, s"$path ran $n jobs")
     }
     // the page is the request's only query: `total_rows` counts nothing
-    val (_, paged) = warm("/api/weekly_statistics_total?page=2&limit=5")
+    val (_, paged) = missThenHit("/api/weekly_statistics_total?page=2&limit=5",
+      "/api/weekly_statistics_total?page=4&limit=6")
     assert(paged.length == 1, s"weekly_statistics_total ran ${paged.length} queries:\n" +
       paged.mkString("\n"))
   }
@@ -290,8 +486,23 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
     assert(recorded("/api/total_vaccines") ==
       s"""[{"total_reported_shots":${1500000L + 2 * 22964750L + 300000L}}]""")
 
+    // keys no request has made, answered from the lineage star while its
+    // CSVs exist, then requested (memo misses) once they are gone
+    val fresh = Seq(
+      "/api/weekly_statistics_by_country" -> Map("country_code" -> "BR"),
+      "/api/weekly_statistics_total" -> Map("page" -> "3", "limit" -> "4"),
+      "/api/graph/country/deaths" -> Map("country" -> "BR"))
+    val expected = fresh.map { case (path, params) =>
+      assert(memo.get(BodyMemo.key(path, params)).isEmpty, path)
+      val want = direct(path, params)
+      assert(want._1 == 200 && want._2.length > 20, s"$path: $want")
+      want
+    }
+
     WhoFixture.deleteTree(dataDir)
     assert(!Files.exists(dataDir))
+    for (((path, params), want) <- fresh.zip(expected))
+      assert(get(url(path, params)) == want, path)
     for (r <- readRoutes) assert(get(r) == (200 -> recorded(r)), r)
   }
 
