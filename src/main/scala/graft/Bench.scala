@@ -34,18 +34,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // tmpfs-backed shuffle/checkpoint scratch — see EphemeralIO scaladoc
-    val eph = graft.util.EphemeralIO.stage("bench")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    val spark = eph.fold(builder)(d => builder.config("spark.local.dir", d))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("bench")
     // Heap pre-touch, FIRST and single-threaded (round-7 finding): this box
     // class faults anonymous memory at ~650 MB/s on one thread but collapses
     // to ~50-100 MB/s aggregate the moment several threads fault
@@ -530,9 +519,8 @@ object Bench {
     // cpus in the artifact: executor-thread count changes per-task
     // framework CPU materially (a width-4 run is NOT comparable to a
     // width-32 one — learned the hard way in round 8), so the artifact
-    // must carry its own execution width. Quoted fallback for non-numeric
-    // values ('*' for local[*]) keeps the artifact valid JSON.
-    val cpusJson = cpus.toIntOption.map(_.toString).getOrElse("\"" + cpus + "\"")
+    // must carry its own execution width
+    val cpus = Sessions.cpus
     // heap posture in the artifact: CPU/wall comparisons are only valid at
     // equal width AND equal heap (a 32g pre-touched heap flips this box
     // into its reclaim storm; 12g does not — the round-9 finding)
@@ -553,7 +541,7 @@ object Bench {
     val repsRun = repStorm.size
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
     def buildJson(rddQs: String, totalRdd: Double, rddStorm: String): String =
-      f"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"reps_run":$repsRun,"rerun_passes":$rerunPasses,"clean_reps":$cleanReps,"timing_mode":"$timingMode","cpus":$cpusJson,"heap_gb":$heapGb%.1f,"pretouch_mbps":$pretouchMbps%.1f,"rep_probe_mbps":$repProbeJson,"rep_min_probe_mbps":$repMinProbeJson,"rep_sys_usr":$repSysUsrJson,"rep_storm":$repStormJson,"rep_samples":$repSamplesJson,"query_storm":$queryStormJson,"queries_rdd":$rddQs,"total_rdd_s":$totalRdd,"rdd_pass_storm":$rddStorm,"spread":$spreads,"cpu":$cpuMap,"usr":$usrMap,"sys":$sysMap}"""
+      f"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"reps_run":$repsRun,"rerun_passes":$rerunPasses,"clean_reps":$cleanReps,"timing_mode":"$timingMode","cpus":$cpus,"heap_gb":$heapGb%.1f,"pretouch_mbps":$pretouchMbps%.1f,"rep_probe_mbps":$repProbeJson,"rep_min_probe_mbps":$repMinProbeJson,"rep_sys_usr":$repSysUsrJson,"rep_storm":$repStormJson,"rep_samples":$repSamplesJson,"query_storm":$queryStormJson,"queries_rdd":$rddQs,"total_rdd_s":$totalRdd,"rdd_pass_storm":$rddStorm,"spread":$spreads,"cpu":$cpuMap,"usr":$usrMap,"sys":$sysMap}"""
     // Artifact durability (two rounds of perf evidence were lost to stdout
     // interleaving / DNF): write the full JSON to a well-known file FIRST,
     // then print a marker-prefixed copy (grep-recoverable even if the tail

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: run one query and print per-stage task counts / CPU / wall
   * (which stage eats the budget — shuffle map, custom exec, final sort?).
@@ -10,13 +9,7 @@ object DbgStages {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("dbg-stages")
     spark.read.parquet(s"$dir/lineitem.parquet").count()
     // warm rep; cache cleared afterwards so the measured run pays for its
     // own Eager.cached builds exactly like a Bench rep does

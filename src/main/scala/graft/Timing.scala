@@ -1,18 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev utility: time one query N times at a given sf dir. */
 object Timing {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("timing")
     spark.read.parquet(s"$dir/lineitem.parquet").count()
     // SPARK_GRAFT_TIMING_MODE=rdd: execute the FULL materializing physical
     // plan via queryExecution.toRdd.count() — no logical Aggregate is

@@ -479,7 +479,7 @@ object Serve {
     case "/api/predict_cases" =>
       (p.get("country"), p.get("start_date")) match {
         case (Some(country), Some(startDate)) if p.get("model").contains("lstm") =>
-          val days = math.min(p.getOrElse("days", "30").toInt, 104)
+          val days = math.min(positiveInt(p, "days", 30), 104)
           // the reference's input CSV (owid-covid-data.csv) is a missing
           // large blob in its own repo, so the feed location is a deploy
           // concern: point SPARK_GRAFT_OWID_CSV at any owid-shaped CSV
@@ -538,7 +538,7 @@ object Serve {
               }
           }
         case (Some(country), Some(startDate)) =>
-          val days = math.min(p.getOrElse("days", "30").toInt, 104)
+          val days = math.min(positiveInt(p, "days", 30), 104)
           parseLooseDate(startDate) match {
             case None =>
               Answer(400, err(s"unparsable start_date: $startDate"))
@@ -591,33 +591,49 @@ object Serve {
     val keyParts = if (rest.isEmpty) Seq.empty
       else rest.split("/").toSeq.map(java.net.URLDecoder.decode(_, "UTF-8"))
 
-    def castKey(i: Int, raw: String): Any = schema(pks(i)).dataType match {
-      case IntegerType => raw.toInt
-      case LongType    => raw.toLong
-      case _           => raw
+    // a path key parses like Flask's `<int:year>` converter: one that does
+    // not matches no route
+    object Key {
+      def unapply(ks: Seq[String]): Option[Seq[Any]] = {
+        val vals = ks.zip(pks).map { case (raw, pk) =>
+          schema(pk).dataType match {
+            case IntegerType => raw.toIntOption
+            case LongType    => raw.toLongOption
+            case _           => Some(raw)
+          }
+        }
+        if (ks.length == pks.length && vals.forall(_.isDefined)) Some(vals.flatten) else None
+      }
+    }
+    def readObject(): com.fasterxml.jackson.databind.JsonNode = {
+      val node = try M.readTree(readBody(ex)) catch {
+        case e: com.fasterxml.jackson.core.JsonProcessingException =>
+          throw new BadRequest(s"body is not JSON: ${e.getOriginalMessage}")
+      }
+      if (!node.isObject) throw new BadRequest("body must be a JSON object")
+      node
     }
 
     try {
       (ex.getRequestMethod, keyParts) match {
         case ("GET", Seq()) =>
           respond(ex, 200, jsonArray(table.all))
-        case ("GET", ks) if ks.length == pks.length =>
-          table.get(ks.zipWithIndex.map { case (k, i) => castKey(i, k) }) match {
+        case ("GET", Key(keyVals)) =>
+          table.get(keyVals) match {
             case Some(rec) => respond(ex, 200, rec)
             case None      => respond(ex, 404, err("record not found"))
           }
         case ("POST", Seq()) =>
-          val node = M.readTree(readBody(ex))
+          val node = readObject()
           if (pks.exists(pk => !node.hasNonNull(pk)))
             respond(ex, 400, err(s"fields ${pks.mkString(", ")} are required"))
           else {
             table.put(rowFromJson(node, schema))
             respond(ex, 201, """{"message":"record created"}""")
           }
-        case ("PUT", ks) if ks.length == pks.length =>
-          val keyVals = ks.zipWithIndex.map { case (k, i) => castKey(i, k) }
+        case ("PUT", Key(keyVals)) =>
           // read before taking the table's lock: a slow body blocks only this request
-          val upd = M.readTree(readBody(ex))
+          val upd = readObject()
           val updated = table.update(keyVals) { existing =>
             val cur = M.readTree(existing)
             // partial update: body fields win, PK comes from the path
@@ -633,14 +649,16 @@ object Serve {
           }
           if (updated) respond(ex, 200, """{"message":"record updated"}""")
           else respond(ex, 404, err("record not found"))
-        case ("DELETE", ks) if ks.length == pks.length =>
-          if (table.delete(ks.zipWithIndex.map { case (k, i) => castKey(i, k) }))
-            respond(ex, 200, """{"message":"record deleted"}""")
+        case ("DELETE", Key(keyVals)) =>
+          if (table.delete(keyVals)) respond(ex, 200, """{"message":"record deleted"}""")
           else respond(ex, 404, err("record not found"))
+        case ("GET" | "PUT" | "DELETE", ks) if ks.length == pks.length =>
+          respond(ex, 404, err("no such route"))
         case (m, _) =>
           respond(ex, 405, err(s"method $m not allowed on $path"))
       }
     } catch {
+      case e: BadRequest => respond(ex, 400, err(e.getMessage))
       case e: Exception =>
         respond(ex, 500, err(Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
     }
@@ -665,17 +683,11 @@ object Serve {
       else null
     }
 
-  /** Demo main: ETL the committed reference CSVs, serve on :8080. */
+  /** Demo main: ETL the WHO CSVs at `args(0)` (default
+    * `WhoStarQueries.dataDir`), serve on :8080. */
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    val dataDir = if (args.nonEmpty) args(0) else "/root/reference/app/data/data_covid"
+    val spark = graft.Sessions.local("serve")
+    val dataDir = if (args.nonEmpty) args(0) else graft.etl.WhoStarQueries.dataDir
     val star = graft.etl.EtlJob.run(spark, dataDir)
     val server = start(star, args.drop(1).headOption.map(_.toInt).getOrElse(8080))
     println(s"serving on :${server.getAddress.getPort} — GET /health, " +

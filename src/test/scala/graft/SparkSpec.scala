@@ -3,31 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (getOrCreate dedups across
-  * suites in the forked test JVM).
+  * suites in the forked test JVM), at the mains' posture: the tmpfs scratch
+  * keeps a host-disk throughput dip from stretching a query past
+  * BudgetSpec's bound, and GraftExtensions is active in every suite.
   */
 trait SparkSpec {
-  lazy val spark: SparkSession = {
-    // same tmpfs scratch posture as Bench/Verify: a host-disk throughput dip
-    // mid-suite once stretched a 1 s query to 81 s and tripped BudgetSpec
-    val eph = graft.util.EphemeralIO.stage("test")
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the engine's production registration path: custom functions + the
-      // WindowTopKToHeap optimizer rule are active in every suite
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // static conf: managed tables (BucketedJoinSpec) land on scratch,
-      // never in the checkout's cwd
-      .config("spark.sql.warehouse.dir",
-        eph.getOrElse(sys.props("java.io.tmpdir")) + "/graft-test-warehouse")
-    val s = eph.fold(builder)(d => builder.config("spark.local.dir", d))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local("test")
 
   // follows the same env/prop override as the runtime (WhoStarQueries.dataDir)
   val referenceDataDir = graft.etl.WhoStarQueries.dataDir

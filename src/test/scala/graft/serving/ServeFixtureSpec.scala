@@ -296,6 +296,19 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
     assert(body.endsWith(""""data":[]}"""), body)
   }
 
+  test("predict_cases answers 400 to a non-integer or non-positive days and caps it at 104") {
+    for (model <- Seq("", "&model=lstm"); days <- Seq("abc", "0", "-2", "1.5", "")) {
+      val (code, body) = get(s"/api/predict_cases?country=FR&start_date=2023-03-05&days=$days$model")
+      assert(code == 400, s"days=$days$model: $body")
+      assert(new ObjectMapper().readTree(body).path("error").asText()
+        .contains("days must be an integer >= 1"), s"days=$days$model: $body")
+    }
+    val (code, body) = get("/api/predict_cases?country=FR&start_date=2023-03-05&days=500")
+    assert(code == 200, body)
+    val node = new ObjectMapper().readTree(body)
+    assert(node.path("days").asInt() == 104 && node.path("predictions").size() == 104, body)
+  }
+
   test("a CRUD GET reads its own write even when the same GET came before it") {
     for ((base, key, row, upd) <- Seq(
         ("/country_statistics", "MEMO",
@@ -313,6 +326,19 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
       assert(request("DELETE", s"$base/$key")._1 == 200)
       assert(get(s"$base/$key")._1 == 404)
       assert(get(base) == all)
+    }
+    // a year that is not an integer matches no route, like Flask's <int:year>
+    for (method <- Seq("GET", "PUT", "DELETE")) {
+      val body = if (method == "PUT") Some("""{"total_cases":6}""") else None
+      val (code, resp) = request(method, "/region_yearly_summary/MEMO/twenty", body)
+      assert(code == 404, s"$method: $resp")
+    }
+    // a body that is not a JSON object is the client's error
+    for ((method, path) <- Seq("POST" -> "/country_statistics", "PUT" -> "/country_statistics/MEMO",
+        "POST" -> "/region_yearly_summary", "PUT" -> "/region_yearly_summary/MEMO/2021");
+        body <- Seq("not json", """{"country":""", "[1]", "")) {
+      val (code, resp) = request(method, path, Some(body))
+      assert(code == 400, s"$method $path '$body': $resp")
     }
   }
 

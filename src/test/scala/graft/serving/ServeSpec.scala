@@ -267,22 +267,9 @@ class ServeSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
       // ONE Spark action per request: dates ride the history collect (no
       // second max(date) job), and the bounded series sorts driver-side
       // (no distributed-sort sampling/shuffle jobs)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        assert(get(
-          "/api/predict_cases?country=France&start_date=2020-05-01&days=3&model=lstm")._1 == 200)
-        org.apache.spark.graftaccess.GraftSparkAccess
-          .drainListenerBus(spark.sparkContext)
-        assert(jobs.get() == 1,
-          s"LSTM serving ran ${jobs.get()} Spark jobs; expected one action")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val jobs = sparkJobs(assert(get(
+        "/api/predict_cases?country=France&start_date=2020-05-01&days=3&model=lstm")._1 == 200))
+      assert(jobs == 1, s"LSTM serving ran $jobs Spark jobs; expected one action")
       // unknown country → 400; too-short history → 400
       assert(get("/api/predict_cases?country=Atlantis&start_date=2020-05-01&model=lstm")._1 == 400)
       assert(get("/api/predict_cases?country=Italy&start_date=2020-05-01&model=lstm")._1 == 400)
