@@ -19,18 +19,22 @@ object Warehouse {
   def listTables(spark: SparkSession): Seq[String] =
     spark.catalog.listTables().collect().map(_.name).toSeq.sorted
 
-  /** Generic limited scan by table name (reference: app/routes/tables.py:29
+  /** A catalog table by name (reference: app/routes/tables.py:29
     * string-interpolates the URL path into SQL — an injection hole; here the
     * name must exist in the catalog, nothing is ever interpolated).
     */
-  def tableScan(spark: SparkSession, name: String, limit: Int = 100): DataFrame = {
+  def table(spark: SparkSession, name: String): DataFrame = {
     // an unparseable "name" (e.g. injection attempts) is just an unknown table
     val exists =
       try spark.catalog.tableExists(name)
       catch { case _: Exception => false }
     require(exists, s"unknown table: $name")
-    spark.table(name).limit(limit)
+    spark.table(name)
   }
+
+  /** Generic limited scan by table name: [[table]], capped at `limit` rows. */
+  def tableScan(spark: SparkSession, name: String, limit: Int = 100): DataFrame =
+    table(spark, name).limit(limit)
 
   /** Rows → JSON records (reference: the per-value coercion loop at
     * app/routes/data.py:14-48 — Spark's encoders already emit JSON-safe

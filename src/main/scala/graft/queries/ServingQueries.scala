@@ -33,15 +33,16 @@ object ServingQueries {
       )
       .agg(sum(col("new_reported_shots")).as("total_weekly_vaccinations"))
 
-  /** The small fact aggregates the totals, worldmap, top5 and weekly routes
-    * read instead of the facts:
+  /** The fact aggregates the totals, worldmap, top5 and weekly routes read
+    * instead of the facts:
     *  - `countryTotals`: per `country_short_code`, `total_cases` and
     *    `total_deaths` summed over the weekly fact;
     *  - `countryNameTotals`: the same per `country_name`, after the inner
     *    join with the country dimension;
     *  - `countryShots`: per `country_short_code`, `total_shots` summed over
     *    the daily vaccine fact;
-    *  - `weeklyVaccinations`: the weekly routes' CTE, above.
+    *  - `weeklyJoined`: the weekly fact joined with the country dimension
+    *    and the weekly routes' CTE, above ([[weeklyJoined]]).
     *
     * Every summed column is an integer type (`week_new_reported_*` int,
     * `new_reported_shots` long), so a sum of these partial sums has the
@@ -51,7 +52,7 @@ object ServingQueries {
       countryTotals: DataFrame,
       countryNameTotals: DataFrame,
       countryShots: DataFrame,
-      weeklyVaccinations: DataFrame,
+      weeklyJoined: DataFrame,
   )
 
   /** Defines the [[FactAggregates]] over `star`, passing each through `keep`
@@ -76,7 +77,7 @@ object ServingQueries {
       countryShots = keep(star.dailyVaccineStatistics
         .groupBy("country_short_code")
         .agg(sum("new_reported_shots").as("total_shots"))),
-      weeklyVaccinations = keep(weeklyVaccinations(star.dailyVaccineStatistics)),
+      weeklyJoined = keep(weeklyJoined(star, weeklyVaccinations(star.dailyVaccineStatistics))),
     )
   }
 
@@ -117,7 +118,7 @@ object ServingQueries {
     */
   def weeklyStatisticsTotal(star: StarSchema, agg: FactAggregates,
       page: Int, limit: Int): DataFrame =
-    weeklyJoined(star, agg.weeklyVaccinations)
+    agg.weeklyJoined
       .drop("country_short_code")
       .orderBy(col("country").asc_nulls_last, col("date"))
       .offset((page - 1) * limit)
@@ -130,13 +131,23 @@ object ServingQueries {
 
   def weeklyStatisticsTotalRows(star: StarSchema): Long = star.weeklyStatistics.count()
 
-  /** GET /weekly_statistics_by_country (reference: app/routes/data.py:180-214). */
+  /** GET /weekly_statistics_by_country (reference: app/routes/data.py:180-214),
+    * ordered by date like the reference's `ORDER BY`.
+    *
+    * One country's rows are sorted in one partition, not range-partitioned
+    * by an `orderBy`: over the stored weekly join that is one Spark job with
+    * no exchange. Its one task scans the whole stored in-memory join (240
+    * countries × 261 weeks on the reference's data) and sorts at most one
+    * country's weeks.
+    */
   def weeklyStatisticsByCountry(star: StarSchema, agg: FactAggregates,
       countryCode: String): DataFrame =
-    weeklyJoined(star, agg.weeklyVaccinations)
-      .filter(col("country_short_code") === lit(countryCode))
-      .drop("country_short_code")
-      .orderBy(col("date"))
+    oneCountrySorted(agg.weeklyJoined.filter(col("country_short_code") === lit(countryCode))
+      .drop("country_short_code"))
+
+  /** `rows`, one country's series, sorted by `date` in a single partition. */
+  private def oneCountrySorted(rows: DataFrame): DataFrame =
+    rows.coalesce(1).sortWithinPartitions("date")
 
   /** GET /total_cases, /total_deaths, /total_vaccines
     * (reference: app/routes/data.py:93-106). */
@@ -238,21 +249,22 @@ object ServingQueries {
 
   /** GET /graph/country/<metric> — intended semantics (reference maps
     * metrics to nonexistent columns, app/routes/graph.py:10-14): per-country
-    * time series of a real metric.
+    * time series of a real metric, ordered by date.
+    *
+    * Sorted in one partition like [[weeklyStatisticsByCountry]]: over the
+    * stored star, one job whose one task scans the stored in-memory fact.
     */
   def graphCountry(star: StarSchema, countryCode: String, metric: String): DataFrame =
     metric match {
       case "vaccinations" =>
-        star.dailyVaccineStatistics
+        oneCountrySorted(star.dailyVaccineStatistics
           .filter(col("country_short_code") === lit(countryCode))
-          .select(col("day_of_report").as("date"), col("new_reported_shots").as("value"))
-          .orderBy("date")
+          .select(col("day_of_report").as("date"), col("new_reported_shots").as("value")))
       case "cases" | "deaths" =>
         val c = if (metric == "cases") "week_new_reported_cases" else "week_new_reported_deaths"
-        star.weeklyStatistics
+        oneCountrySorted(star.weeklyStatistics
           .filter(col("country_short_code") === lit(countryCode))
-          .select(col("date_of_report").as("date"), col(c).as("value"))
-          .orderBy("date")
+          .select(col("date_of_report").as("date"), col(c).as("value")))
       case other => throw new IllegalArgumentException(s"unknown metric: $other")
     }
 }

@@ -41,21 +41,33 @@ import graft.queries.ServingQueries.FactAggregates
   * executed plan, pinning that plan's broadcast relations and shuffle
   * files for as long as the caller holds the lineage star.
   *
-  * `start` also stores, the same way, the small fact aggregates of
-  * [[ServingQueries.FactAggregates]], plus the weekly fact's row count as a
-  * `Long`. Nine routes read only those and the stored star, so none of them
-  * aggregates a fact per request:
+  * `start` also stores, the same way, the fact aggregates of
+  * [[ServingQueries.FactAggregates]], the weekly fact joined with the
+  * country dimension and the weekly-vaccinations CTE among them, plus the
+  * weekly fact's row count as a `Long`. Nine routes read only those and the
+  * stored star, so none of them aggregates or joins a fact per request:
   *  - `total_cases`, `total_deaths`, `total_vaccines` and the three
   *    `worldmap` routes read the per-country totals and shots;
   *  - `top5_summary` reads the per-`country_name` totals;
-  *  - `weekly_statistics_by_country` and `weekly_statistics_total` join the
-  *    stored fact with the country dimension and the stored
-  *    `weeklyVaccinations`; the latter's `total_rows` is the stored count.
+  *  - `weekly_statistics_by_country` and `weekly_statistics_total` read the
+  *    stored weekly join; the latter's `total_rows` is the stored count.
   * Their results are exact: every summed column is an integer type, so a
   * sum of per-country partial sums equals the direct sum, nulls included.
   * The served star is immutable (no CRUD route writes to it), so the
   * aggregates never need invalidating. They are not registered in the
   * catalog, so `/api/table/<name>` still serves only the six star tables.
+  *
+  * A cold key of a one-country route (`weekly_statistics_by_country`,
+  * `graph/country/<metric>`) is one Spark job with no exchange: the route
+  * filters its country's rows and sorts them in one partition
+  * (`coalesce(1).sortWithinPartitions`) instead of range-partitioning them.
+  * That one task scans the whole stored in-memory table it reads (the
+  * weekly join or fact, 240 countries × 261 weeks on the reference's data,
+  * or the daily vaccination fact) and sorts at most one country's rows; a
+  * star too large for one task per request would want its stored tables
+  * partitioned by country instead.
+  * `/api/table/<name>` encodes rows before its 100-row cap, so its plan is a
+  * `CollectLimit` over the scan, again with no exchange.
   *
   * Repeat reads run no Spark job. The answer of a memoized route is a pure
   * function of the stored star, the stored aggregates, the weekly fact's row
@@ -87,6 +99,20 @@ import graft.queries.ServingQueries.FactAggregates
   * Requests run on a pool of daemon dispatcher threads sized to the
   * session's `defaultParallelism`, so concurrent clients overlap instead of
   * queueing on one dispatcher thread.
+  *
+  * Responses go out with TCP_NODELAY: `start` sets the JDK's own
+  * `sun.net.httpserver.nodelay` to `true` unless it is already set. The JDK
+  * server writes a response's headers and body as two TCP segments; under
+  * Nagle's algorithm the body then waits for the client's delayed ACK of
+  * the headers, about 40 ms on every keep-alive request after the first.
+  * The JDK reads the property once, when the JVM creates its first
+  * `HttpServer`, so it is set before that.
+  *
+  * The CRUD tables ([[CrudTable]]) keep their rows on the driver, so a CRUD
+  * write or a read by key runs no Spark job. An integer column takes an
+  * integral JSON number or a string that parses to one (as Postgres coerces
+  * it), within the column's range, and a string column any JSON scalar; any
+  * other value is a 400.
   *
   * Response envelopes mirror the reference route by route: plain arrays
   * where `fetch_data` returns records (app/routes/data.py:50-61), a
@@ -275,6 +301,8 @@ object Serve {
     val crudCountry = new CrudTable(spark, countryStatisticsSchema, Seq("country"))
     val crudRegion = new CrudTable(spark, regionYearlySummarySchema, Seq("who_region", "year"))
 
+    // before the JVM's first server: the JDK reads it once (scaladoc above)
+    sys.props.getOrElseUpdate("sun.net.httpserver.nodelay", "true")
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/health", (ex: HttpExchange) =>
       respond(ex, 200, """{"status":"running"}"""))
@@ -465,7 +493,9 @@ object Serve {
     case _ if path.startsWith("/api/table/") =>
       val name = path.stripPrefix("/api/table/")
       try {
-        val body = jsonArray(Warehouse.tableScan(spark, name, limit = 100))
+        // encoded before the cap, so the plan's root is a CollectLimit
+        val body = Warehouse.jsonRecords(Warehouse.table(spark, name)).limit(100)
+          .collect().mkString("[", ",", "]")
         Answer(200, s"""{${jstr(name)}:$body}""")
       } catch {
         case e: IllegalArgumentException =>
@@ -581,8 +611,8 @@ object Serve {
 
   /** The Swagger CRUD surface (api/api_crud.py:60-260), both tables:
     * GET (all / by PK), POST (create), PUT (partial update), DELETE.
-    * Single-row writes flow through [[Warehouse.upsert]]/
-    * [[Warehouse.deleteByKey]] via [[CrudTable]].
+    * Single-row writes and reads by key go to [[CrudTable]]'s driver-side
+    * rows; every body field must be a value of its column ([[columnValue]]).
     */
   private def handleCrud(ex: HttpExchange, prefix: String, table: CrudTable,
       schema: StructType, pks: Seq[String]): Unit = {
@@ -613,6 +643,11 @@ object Serve {
       if (!node.isObject) throw new BadRequest("body must be a JSON object")
       node
     }
+    // the body's non-null fields, each as a value of its column
+    def fields(node: com.fasterxml.jackson.databind.JsonNode): Map[String, Any] =
+      schema.fields.collect {
+        case f if node.hasNonNull(f.name) => f.name -> columnValue(node.get(f.name), f)
+      }.toMap
 
     try {
       (ex.getRequestMethod, keyParts) match {
@@ -628,23 +663,25 @@ object Serve {
           if (pks.exists(pk => !node.hasNonNull(pk)))
             respond(ex, 400, err(s"fields ${pks.mkString(", ")} are required"))
           else {
-            table.put(rowFromJson(node, schema))
+            val given = fields(node)
+            table.put(schema.fields.toSeq.map { f =>
+              given.getOrElse(f.name, f.dataType match {
+                case LongType    => 0L // api_crud.py: data.get(field, 0)
+                case IntegerType => 0
+                case _           => null
+              })
+            })
             respond(ex, 201, """{"message":"record created"}""")
           }
         case ("PUT", Key(keyVals)) =>
-          // read before taking the table's lock: a slow body blocks only this request
-          val upd = readObject()
+          // read and checked before taking the table's lock: a slow or bad
+          // body blocks only this request
+          val upd = fields(readObject())
           val updated = table.update(keyVals) { existing =>
-            val cur = M.readTree(existing)
             // partial update: body fields win, PK comes from the path
-            schema.fields.toSeq.map { f =>
+            schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
               val pkIdx = pks.indexOf(f.name)
-              if (pkIdx >= 0) keyVals(pkIdx)
-              else {
-                val n = if (upd.hasNonNull(f.name)) upd.get(f.name)
-                  else cur.get(f.name)
-                jsonValue(n, f.dataType)
-              }
+              if (pkIdx >= 0) keyVals(pkIdx) else upd.getOrElse(f.name, existing.get(i))
             }
           }
           if (updated) respond(ex, 200, """{"message":"record updated"}""")
@@ -664,24 +701,33 @@ object Serve {
     }
   }
 
-  private def jsonValue(n: com.fasterxml.jackson.databind.JsonNode,
-      dt: DataType): Any =
-    if (n == null || n.isNull) null
-    else dt match {
-      case IntegerType => n.asInt()
-      case LongType    => n.asLong()
-      case DoubleType  => n.asDouble()
-      case _           => n.asText()
-    }
+  private val IntegerText = """\s*([+-]?[0-9]+)\s*""".r
 
-  private def rowFromJson(node: com.fasterxml.jackson.databind.JsonNode,
-      schema: StructType): Seq[Any] =
-    schema.fields.toSeq.map { f =>
-      if (node.hasNonNull(f.name)) jsonValue(node.get(f.name), f.dataType)
-      else if (f.dataType == LongType) 0L // api_crud.py: data.get(field, 0)
-      else if (f.dataType == IntegerType) 0
-      else null
+  /** A CRUD body's JSON value as a value of column `f`. An integer column
+    * takes an integral JSON number, or a string of decimal digits (as
+    * Postgres coerces one), within the column's range; a string column takes
+    * any JSON scalar, as its text. Anything else is the client's error.
+    */
+  private def columnValue(n: com.fasterxml.jackson.databind.JsonNode,
+      f: StructField): Any = {
+    def integral(min: Long, max: Long): Long = {
+      val v =
+        if (n.isIntegralNumber) Some(BigInt(n.bigIntegerValue))
+        else if (n.isTextual) n.asText match {
+          case IntegerText(digits) => Some(BigInt(digits))
+          case _                   => None
+        }
+        else None
+      v.filter(x => x >= min && x <= max).map(_.toLong).getOrElse(throw new BadRequest(
+        s"${f.name} must be an integer in [$min, $max], got $n"))
     }
+    f.dataType match {
+      case IntegerType => integral(Int.MinValue, Int.MaxValue).toInt
+      case LongType    => integral(Long.MinValue, Long.MaxValue)
+      case _ if n.isValueNode => n.asText()
+      case _ => throw new BadRequest(s"${f.name} must be a string, got $n")
+    }
+  }
 
   /** Demo main: ETL the WHO CSVs at `args(0)` (default
     * `WhoStarQueries.dataDir`), serve on :8080. */

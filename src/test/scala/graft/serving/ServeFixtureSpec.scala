@@ -2,6 +2,7 @@ package graft.serving
 
 import java.io.{BufferedReader, InputStreamReader}
 import java.net.{HttpURLConnection, Socket, URI}
+import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import java.util.concurrent.{Callable, ConcurrentLinkedQueue, Executors, TimeUnit}
@@ -38,7 +39,10 @@ import graft.queries.ServingQueries
   * star and runs no Spark job, within the memo's byte budget, while the
   * excluded routes and the CRUD reads compute per request; and requests run
   * on a dispatcher pool, so a client slow to send its body does not hold up
-  * the others and concurrent clients each read their own writes.
+  * the others and concurrent clients each read their own writes. It also
+  * pins each request's fixed costs: no delayed-ACK stall on keep-alive
+  * connections, no Spark job for a CRUD request, one job and no exchange for
+  * a cold one-country key or a capped table scan.
   */
 class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
 
@@ -125,7 +129,7 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
       }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case q: SparkListenerSQLExecutionStart =>
-          queries.add(s"${q.description}: ${q.physicalPlanDescription.take(200)}"); ()
+          queries.add(s"${q.description}: ${q.physicalPlanDescription}"); ()
         case _ =>
       }
     }
@@ -165,6 +169,44 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
         if (rows == "[]") 404 -> s"""{"error":"no data for country '$country'"}"""
         else 200 -> s"""{"data":$rows}"""
     }
+  }
+
+  /** The weekly fact joined with the country dimension and the weekly
+    * vaccinations, aggregated straight from the lineage star. */
+  private lazy val joined: DataFrame = {
+    val ws = star.weeklyStatistics
+    val wv = star.dailyVaccineStatistics.groupBy(
+        col("country_short_code").as("wv_code"),
+        year(col("day_of_report")).as("year"),
+        weekofyear(col("day_of_report")).as("week"))
+      .agg(sum("new_reported_shots").as("total_weekly_vaccinations"))
+    ws.join(broadcast(star.country), Seq("country_short_code"), "left")
+      .join(wv, ws("country_short_code") === wv("wv_code") &&
+        year(ws("date_of_report")) === wv("year") &&
+        weekofyear(ws("date_of_report")) === wv("week"), "left")
+      .select(ws("date_of_report").as("date"), col("country_name").as("country"),
+        col("week_new_reported_cases").as("confirmed_cases"),
+        col("week_new_reported_deaths").as("deaths"),
+        col("total_weekly_vaccinations").as("vaccinations"),
+        ws("country_short_code"))
+  }
+
+  /** `weekly_statistics_by_country`'s rows in the range-partitioned
+    * `orderBy` form. */
+  private def byCountryOrdered(code: String): DataFrame =
+    joined.filter(col("country_short_code") === code).drop("country_short_code").orderBy("date")
+
+  /** `graph/country/<metric>`'s body in the range-partitioned `orderBy` form. */
+  private def graphOrdered(metric: String, code: String): (Int, String) = {
+    val (fact, date, value) = metric match {
+      case "cases"  => (star.weeklyStatistics, "date_of_report", "week_new_reported_cases")
+      case "deaths" => (star.weeklyStatistics, "date_of_report", "week_new_reported_deaths")
+      case _        => (star.dailyVaccineStatistics, "day_of_report", "new_reported_shots")
+    }
+    val rows = array(fact.filter(col("country_short_code") === code)
+      .select(col(date).as("date"), col(value).as("value")).orderBy("date"))
+    if (rows == "[]") 404 -> s"""{"error":"no data for country '$code'"}"""
+    else 200 -> s"""{"data":$rows}"""
   }
 
   /** Every memoized route, with several parameter values: known and unknown
@@ -443,25 +485,9 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
       s"""{"top5_deaths":${array(top5("week_new_reported_deaths", "total_deaths"))},""" +
         s""""top5_cases":${array(top5("week_new_reported_cases", "total_cases"))}}""")
 
-    val wv = dv.groupBy(
-        col("country_short_code").as("wv_code"),
-        year(col("day_of_report")).as("year"),
-        weekofyear(col("day_of_report")).as("week"))
-      .agg(sum("new_reported_shots").as("total_weekly_vaccinations"))
-    val joined = ws.join(broadcast(star.country), Seq("country_short_code"), "left")
-      .join(wv, ws("country_short_code") === wv("wv_code") &&
-        year(ws("date_of_report")) === wv("year") &&
-        weekofyear(ws("date_of_report")) === wv("week"), "left")
-      .select(ws("date_of_report").as("date"), col("country_name").as("country"),
-        col("week_new_reported_cases").as("confirmed_cases"),
-        col("week_new_reported_deaths").as("deaths"),
-        col("total_weekly_vaccinations").as("vaccinations"),
-        ws("country_short_code"))
-    for (code <- Seq("FR", "DE", "ZZ")) {
-      val ref = joined.filter(col("country_short_code") === code)
-        .drop("country_short_code").orderBy("date")
-      assert(body(s"/api/weekly_statistics_by_country?country_code=$code") == array(ref), code)
-    }
+    for (code <- Seq("FR", "DE", "ZZ"))
+      assert(body(s"/api/weekly_statistics_by_country?country_code=$code") ==
+        array(byCountryOrdered(code)), code)
     assert(M.readTree(body("/api/weekly_statistics_by_country?country_code=DE"))
       .elements().asScala.exists(_.hasNonNull("vaccinations")))
 
@@ -500,6 +526,119 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
       "/api/weekly_statistics_total?page=4&limit=6")
     assert(paged.length == 1, s"weekly_statistics_total ran ${paged.length} queries:\n" +
       paged.mkString("\n"))
+  }
+
+  test("keep-alive requests are not held back by the client's delayed ACK") {
+    val path = "/api/disease"
+    assert(get(path)._1 == 200)
+    assert(memo.get(BodyMemo.key(path, Map.empty)).isDefined)
+    val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    val req = HttpRequest.newBuilder(
+      URI.create(s"http://localhost:${server.getAddress.getPort}$path")).GET().build()
+    // one connection: every request after the first reuses it
+    val ms = (0 until 20).map { _ =>
+      val t0 = System.nanoTime()
+      assert(client.send(req, HttpResponse.BodyHandlers.ofString()).statusCode == 200)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    val median = (ms(9) + ms(10)) / 2
+    assert(median < 15, s"median $median ms of ${ms.map(m => f"$m%.1f").mkString(", ")}")
+  }
+
+  test("a CRUD write or read by key runs no Spark job") {
+    val steps = Seq(
+      ("POST", "/country_statistics", Some("""{"country":"NOJOB","total_cases":1}"""), 201),
+      ("GET", "/country_statistics/NOJOB", None, 200),
+      ("PUT", "/country_statistics/NOJOB", Some("""{"total_cases":2}"""), 200),
+      ("DELETE", "/country_statistics/NOJOB", None, 200),
+      ("GET", "/country_statistics/NOJOB", None, 404),
+      ("POST", "/region_yearly_summary",
+        Some("""{"who_region":"NOJOB","year":2021,"total_cases":1}"""), 201),
+      ("GET", "/region_yearly_summary/NOJOB/2021", None, 200),
+      ("PUT", "/region_yearly_summary/NOJOB/2021", Some("""{"total_deaths":3}"""), 200),
+      ("DELETE", "/region_yearly_summary/NOJOB/2021", None, 200),
+      ("DELETE", "/region_yearly_summary/NOJOB/2021", None, 404))
+    val ran = steps.map { case (method, path, body, status) =>
+      val (jobs, _) = sparkWork {
+        val (code, resp) = request(method, path, body)
+        assert(code == status, s"$method $path: $resp")
+      }
+      s"$method $path" -> jobs
+    }
+    assert(ran.forall(_._2 == 0), ran)
+  }
+
+  test("a CRUD value that is not an integer in its column's range answers 400") {
+    val bad = Seq("\"abc\"", "1.5", "1e30", "\"1.5\"", "\"\"", "true", "[1]", "{}",
+      "9223372036854775808", "\"-9223372036854775809\"")
+    try {
+      for (v <- bad) {
+        val (post, postBody) = request("POST", "/country_statistics",
+          Some(s"""{"country":"TYPED","total_cases":$v}"""))
+        assert(post == 400, s"POST total_cases $v: $postBody")
+        assert(get("/country_statistics/TYPED")._1 == 404, s"POST total_cases $v stored a row")
+      }
+      for (v <- bad :+ "2147483648") {
+        val (post, postBody) = request("POST", "/region_yearly_summary",
+          Some(s"""{"who_region":"TYPED","year":$v,"total_cases":1}"""))
+        assert(post == 400, s"POST year $v: $postBody")
+      }
+      assert(get("/region_yearly_summary/TYPED/0")._1 == 404)
+      // a string column takes a scalar, not an object or an array
+      for (v <- Seq("{}", "[\"TYPED\"]")) {
+        val (post, postBody) = request("POST", "/country_statistics", Some(s"""{"country":$v}"""))
+        assert(post == 400, s"POST country $v: $postBody")
+      }
+
+      // integral numbers and strings of digits are accepted, as Postgres coerces them
+      val row = """{"country":"TYPED","total_cases":12,"total_vaccinated":-7}"""
+      assert(request("POST", "/country_statistics",
+        Some("""{"country":"TYPED","total_cases":"12","total_vaccinated":" -7 "}"""))._1 == 201)
+      assert(get("/country_statistics/TYPED") == (200 -> row))
+      val region = """{"who_region":"TYPED","year":2022,"total_cases":1,"total_deaths":5}"""
+      assert(request("POST", "/region_yearly_summary",
+        Some("""{"who_region":"TYPED","year":"2022","total_cases":1,"total_deaths":"+5"}"""))._1 == 201)
+      assert(get("/region_yearly_summary/TYPED/2022") == (200 -> region))
+      for (v <- bad) {
+        val (put, putBody) = request("PUT", "/country_statistics/TYPED",
+          Some(s"""{"total_cases":$v}"""))
+        assert(put == 400, s"PUT total_cases $v: $putBody")
+        val (putYear, putYearBody) = request("PUT", "/region_yearly_summary/TYPED/2022",
+          Some(s"""{"year":$v,"total_deaths":6}"""))
+        assert(putYear == 400, s"PUT year $v: $putYearBody")
+      }
+      val (putRegion, putRegionBody) = request("PUT", "/region_yearly_summary/TYPED/2022",
+        Some("""{"who_region":{"name":"TYPED"},"total_deaths":6}"""))
+      assert(putRegion == 400, putRegionBody)
+      assert(get("/country_statistics/TYPED") == (200 -> row))
+      assert(get("/region_yearly_summary/TYPED/2022") == (200 -> region))
+      assert(request("PUT", "/country_statistics/TYPED", Some("""{"total_cases":"13"}"""))._1 == 200)
+      assert(get("/country_statistics/TYPED") == (200 -> row.replace("12", "13")))
+    } finally {
+      request("DELETE", "/country_statistics/TYPED")
+      request("DELETE", "/region_yearly_summary/TYPED/2022")
+    }
+  }
+
+  test("a cold one-country key runs one Spark job and answers what the orderBy form answers") {
+    // the `probe` parameter makes each measured key cold without changing its answer
+    val cold = Seq("FR", "DE", "QQ").flatMap { code =>
+      (s"/api/weekly_statistics_by_country?country_code=$code&probe=cold" ->
+        (200 -> array(byCountryOrdered(code)))) +:
+        Seq("cases", "deaths", "vaccinated").map(m =>
+          s"/api/graph/country/$m?country=$code&probe=cold" -> graphOrdered(m, code))
+    }.map { case (path, want) =>
+      path -> sparkWork(assert(get(path) == want, path))._1
+    }
+    assert(cold.forall(_._2 == 1), cold)
+  }
+
+  test("table/<name> encodes before its cap, so its plan has no exchange") {
+    for (t <- Seq("disease", "weekly_statistics")) {
+      val (_, plans) = sparkWork(assert(get(s"/api/table/$t")._1 == 200, t))
+      assert(plans.nonEmpty && plans.forall(p => p.contains("CollectLimit") &&
+        !p.contains("Exchange")), s"$t:\n${plans.mkString("\n")}")
+    }
   }
 
   test("reads are served from the star materialized at start, not the CSVs") {

@@ -9,9 +9,9 @@ values after sorting rows. Usage:
 
 Env knobs for the sf0.1 self-audit (where some deliberately-quadratic
 oracle forms exceed the sandbox's memory):
-    ORACLE_MEM_LIMIT   duckdb memory_limit (default 24GB) — a too-big
-                       oracle errors per-query instead of OOM-killing
-                       the whole audit process
+    ORACLE_MEM_LIMIT   duckdb memory_limit (default half of the box's
+                       MemTotal) — a too-big oracle errors per-query
+                       instead of OOM-killing the whole audit process
     ORACLE_TIMEOUT_S   per-query wall timeout in seconds (default 300);
                        the watchdog interrupts duckdb → FAIL, next query
 """
@@ -53,12 +53,18 @@ def repr_mismatch(got: pd.DataFrame, want: pd.DataFrame):
     return bad
 
 
+def default_mem_limit() -> str:
+    """Half of the box's physical memory (MemTotal), as a duckdb memory_limit."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{total // 2 // 2**20}MiB"
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
-    con.execute("SET memory_limit='%s'" % os.environ.get("ORACLE_MEM_LIMIT", "24GB"))
+    con.execute("SET memory_limit='%s'" % os.environ.get("ORACLE_MEM_LIMIT", default_mem_limit()))
     timeout_s = float(os.environ.get("ORACLE_TIMEOUT_S", "300"))
     for t in TABLES:
         # driver testdata is a single file; AuditSample's restricted
