@@ -2,7 +2,7 @@ package graft.serving
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -49,25 +49,41 @@ import graft.queries.ServingQueries.FactAggregates
   *  - `total_cases`, `total_deaths`, `total_vaccines` and the three
   *    `worldmap` routes read the per-country totals and shots;
   *  - `top5_summary` reads the per-`country_name` totals;
-  *  - `weekly_statistics_by_country` and `weekly_statistics_total` read the
-  *    stored weekly join; the latter's `total_rows` is the stored count.
+  *  - `weekly_statistics_by_country` (through the index below) and
+  *    `weekly_statistics_total` read the stored weekly join; the latter's
+  *    `total_rows` is the stored count.
   * Their results are exact: every summed column is an integer type, so a
   * sum of per-country partial sums equals the direct sum, nulls included.
   * The served star is immutable (no CRUD route writes to it), so the
   * aggregates never need invalidating. They are not registered in the
   * catalog, so `/api/table/<name>` still serves only the six star tables.
   *
-  * A cold key of a one-country route (`weekly_statistics_by_country`,
-  * `graph/country/<metric>`) is one Spark job with no exchange: the route
-  * filters its country's rows and sorts them in one partition
-  * (`coalesce(1).sortWithinPartitions`) instead of range-partitioning them.
-  * That one task scans the whole stored in-memory table it reads (the
-  * weekly join or fact, 240 countries × 261 weeks on the reference's data,
-  * or the daily vaccination fact) and sorts at most one country's rows; a
-  * star too large for one task per request would want its stored tables
-  * partitioned by country instead.
+  * The one-country routes (`weekly_statistics_by_country`,
+  * `graph/country/<metric>`) answer from an index built at start
+  * ([[CountryIndex]]): every country's by-country body and its `cases`,
+  * `deaths` and `vaccinated` graph bodies, encoded by Spark's own JSON
+  * writer (`to_json(struct(…))`, the writer behind `toJSON`) and kept as
+  * UTF-8 bytes by country code. Building it is two Spark jobs, one
+  * projection of the stored weekly join (by-country, cases and deaths
+  * records) and one of the daily vaccination fact; the driver groups the
+  * records by code and sorts each country's by date. On the reference's
+  * size (240 countries × 261 weeks) the bodies are about 9 MB of UTF-8. A
+  * request then runs no job: an unknown code answers `[]` by country and
+  * the `no data for country` 404 by graph; a missing parameter or an
+  * unknown metric is still a 400. These answers are not also memoized. If
+  * the bodies would exceed [[MemoBudgetBytes]], the server keeps no index
+  * and each cold key is one Spark job with no exchange, as before: the
+  * route filters its country's rows and sorts them in one partition
+  * (`coalesce(1).sortWithinPartitions`), in one task that scans the whole
+  * stored table it reads.
+  *
   * `/api/table/<name>` encodes rows before its 100-row cap, so its plan is a
-  * `CollectLimit` over the scan, again with no exchange.
+  * `CollectLimit` over the scan, with no exchange. For the six views `start`
+  * registers, the capped body is computed on a name's first request and
+  * kept; it is served while the session catalog still resolves the name to
+  * that same registered view, a driver-side lookup that runs no job. A
+  * name a caller has re-registered, or any other name, runs the capped
+  * scan on every request.
   *
   * Repeat reads run no Spark job. The answer of a memoized route is a pure
   * function of the stored star, the stored aggregates, the weekly fact's row
@@ -80,11 +96,12 @@ import graft.queries.ServingQueries.FactAggregates
   *    included, which therefore aggregate a fact once per key per server;
   *  - `weekly_statistics_total`, for valid parameters;
   *  - `top5_summary`;
-  *  - `graph/country/<metric>`: its 200 bodies and its `no data for
-  *    country` 404, which the data decides.
+  *  - `graph/country/<metric>` and `weekly_statistics_by_country`, when the
+  *    server keeps no one-country index: the graph route's 200 bodies and
+  *    its `no data for country` 404, which the data decides.
   * Not memoized, because their answer is not a function of the stored star:
   *  - `table/<name>` reads the session catalog, which any caller can
-  *    re-register;
+  *    re-register (its stored bodies are the view rule above);
   *  - `country_covid_rates` reads the caller's `population` DataFrame;
   *  - `metrics`, `predict_cases` and `predicted_weekly_statistics` fit or
   *    read models; the last is already one bounded job per request, which
@@ -105,8 +122,18 @@ import graft.queries.ServingQueries.FactAggregates
   * server writes a response's headers and body as two TCP segments; under
   * Nagle's algorithm the body then waits for the client's delayed ACK of
   * the headers, about 40 ms on every keep-alive request after the first.
-  * The JDK reads the property once, when the JVM creates its first
-  * `HttpServer`, so it is set before that.
+  *
+  * Idle keep-alive connections stay open: `start` sets the JDK's
+  * `sun.net.httpserver.maxIdleConnections` to [[MaxIdleConnections]]
+  * (10,000) unless it is already set. At the JDK's default of 200, once 200
+  * connections sit idle the server closes each further connection right
+  * after its response, without a `Connection: close` header; the client
+  * then sends its next request on the closed socket, and a POST, PUT or
+  * DELETE, which the JDK client does not retry, fails. The server still
+  * closes a connection idle for `sun.net.httpserver.idleInterval` (30 s).
+  *
+  * The JDK reads both properties once, when the JVM creates its first
+  * `HttpServer`, so they are set before that.
   *
   * The CRUD tables ([[CrudTable]]) keep their rows on the driver, so a CRUD
   * write or a read by key runs no Spark job. An integer column takes an
@@ -139,8 +166,45 @@ object Serve {
     params.get(name).fold(default)(v => v.toIntOption.filter(_ >= 1)
       .getOrElse(throw new BadRequest(s"$name must be an integer >= 1, got '$v'")))
 
-  /** The response memo's budget: UTF-8 body bytes plus key characters. */
+  /** The response memo's budget: UTF-8 body bytes plus key characters. It
+    * also bounds the one-country index ([[CountryIndex]]). */
   private[serving] val MemoBudgetBytes: Long = 64L << 20
+
+  /** Keep-alive connections the JDK server keeps open while idle (its
+    * `sun.net.httpserver.maxIdleConnections`, default 200). */
+  private[serving] val MaxIdleConnections = 10000
+
+  private val GraphPrefix = "/api/graph/country/"
+  private val TablePrefix = "/api/table/"
+
+  private def noData(country: String): String = err(s"no data for country '$country'")
+
+  /** A `graph/country/<metric>` request's country and its metric as
+    * [[ServingQueries.graphCountry]] names it; a missing country or an
+    * unknown metric is a [[BadRequest]]. The reference's METRIC_MAP keys
+    * (graph.py:10-14); "vaccinated" is its daily-shots series (the mapped
+    * columns don't exist — intended semantics per SURVEY.md §1.4).
+    */
+  private def graphRequest(path: String, p: Map[String, String]): (String, String) = {
+    val metric = path.stripPrefix(GraphPrefix)
+    val country = p.getOrElse("country", throw new BadRequest("missing parameter: country"))
+    country -> (metric match {
+      case "cases"      => "cases"
+      case "deaths"     => "deaths"
+      case "vaccinated" => "vaccinations"
+      case _            => throw new BadRequest(s"unknown metric: $metric")
+    })
+  }
+
+  /** A one-country route's answer from `index`; None for any other path. */
+  private def indexed(index: CountryIndex, path: String,
+      p: Map[String, String]): Option[(Int, Array[Byte])] =
+    if (path == "/api/weekly_statistics_by_country")
+      Some(200 -> index.weeklyByCountry(p("country_code")))
+    else if (path.startsWith(GraphPrefix)) {
+      val (country, metric) = graphRequest(path, p)
+      Some(index.series(metric, country).fold(404 -> utf8(noData(country)))(200 -> _))
+    } else None
 
   /** Plain-array routes (the reference's `fetch_data` shape,
     * app/routes/data.py:63-106, 180-214): per-table scans + totals +
@@ -301,8 +365,20 @@ object Serve {
     val crudCountry = new CrudTable(spark, countryStatisticsSchema, Seq("country"))
     val crudRegion = new CrudTable(spark, regionYearlySummarySchema, Seq("who_region", "year"))
 
-    // before the JVM's first server: the JDK reads it once (scaladoc above)
+    val index = CountryIndex.build(served, agg, MemoBudgetBytes)
+    // the views registered above, each with its capped body once requested
+    val catalog = spark.sessionState.catalog
+    val views = served.tables.flatMap { case (n, _) => catalog.getRawTempView(n).map(n -> _) }.toMap
+    val viewBodies = new ConcurrentHashMap[String, (Int, Array[Byte])]()
+    // the name of a `table/<name>` path whose name the catalog still resolves
+    // to the view registered above: a driver-side lookup, no job
+    def startView(path: String): Option[String] =
+      Some(path.stripPrefix(TablePrefix)).filter(name => path.startsWith(TablePrefix) &&
+        views.get(name).exists(v => catalog.getRawTempView(name).exists(_ eq v)))
+
+    // before the JVM's first server: the JDK reads both once (scaladoc above)
     sys.props.getOrElseUpdate("sun.net.httpserver.nodelay", "true")
+    sys.props.getOrElseUpdate("sun.net.httpserver.maxIdleConnections", MaxIdleConnections.toString)
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/health", (ex: HttpExchange) =>
       respond(ex, 200, """{"status":"running"}"""))
@@ -312,14 +388,17 @@ object Serve {
     val memo = new BodyMemo(MemoBudgetBytes)
     def memoized(path: String): Boolean =
       arr.contains(path) || env.contains(path) || path == "/api/weekly_statistics_total" ||
-        path == "/api/top5_summary" || path.startsWith("/api/graph/country/")
+        path == "/api/top5_summary" || path.startsWith(GraphPrefix)
 
     server.createContext("/api", (ex: HttpExchange) => {
       val path = ex.getRequestURI.getPath
       val (status, body) = try {
         val params = queryParams(ex)
+        val view = startView(path)
+        val stored = index.flatMap(indexed(_, path, params))
+          .orElse(view.flatMap(n => Option(viewBodies.get(n))))
         val key = if (memoized(path)) Some(BodyMemo.key(path, params)) else None
-        key.flatMap(memo.get).getOrElse {
+        stored.orElse(key.flatMap(memo.get)).getOrElse {
           val a = (arr.get(path), env.get(path)) match {
             case (Some(fn), _) => Answer(200, jsonArray(fn(params)))
             case (_, Some(fn)) => Answer(200, s"""{"data":${jsonArray(fn(params))}}""")
@@ -329,6 +408,9 @@ object Serve {
           val answer = (a.status, utf8(a.body))
           // 400 and 500 answers are never stored; 404 is graph's data-derived one
           if (a.status == 200 || a.status == 404) key.foreach(memo.put(_, answer))
+          // kept only if the view was the registered one after the scan too
+          if (a.status == 200)
+            view.filter(_ => startView(path).isDefined).foreach(viewBodies.put(_, answer))
           answer
         }
       } catch {
@@ -465,33 +547,15 @@ object Serve {
       Answer(200, """{"server_encoding":"UTF8","client_encoding":"UTF8"}""")
 
     // per-country metric series (graph.py:10-52): /api/graph/country/<metric>
-    case _ if path.startsWith("/api/graph/country/") =>
-      val metric = path.stripPrefix("/api/graph/country/")
-      p.get("country") match {
-        case None => Answer(400, err("missing parameter: country"))
-        case Some(country) =>
-          // reference METRIC_MAP keys (graph.py:10-14); "vaccinated" is its
-          // daily-shots series (the mapped columns don't exist — intended
-          // semantics per SURVEY.md §1.4)
-          val mapped = metric match {
-            case "cases"      => Some("cases")
-            case "deaths"     => Some("deaths")
-            case "vaccinated" => Some("vaccinations")
-            case _            => None
-          }
-          mapped match {
-            case None => Answer(400, err(s"unknown metric: $metric"))
-            case Some(m) =>
-              val rows = Warehouse.jsonRecords(
-                ServingQueries.graphCountry(star, country, m)).collect()
-              if (rows.isEmpty) Answer(404, err(s"no data for country '$country'"))
-              else Answer(200, s"""{"data":${rows.mkString("[", ",", "]")}}""")
-          }
-      }
+    case _ if path.startsWith(GraphPrefix) =>
+      val (country, metric) = graphRequest(path, p)
+      val rows = Warehouse.jsonRecords(ServingQueries.graphCountry(star, country, metric)).collect()
+      if (rows.isEmpty) Answer(404, noData(country))
+      else Answer(200, s"""{"data":${rows.mkString("[", ",", "]")}}""")
 
     // generic capped scan (tables.py:26-40): {"<name>": […]}
-    case _ if path.startsWith("/api/table/") =>
-      val name = path.stripPrefix("/api/table/")
+    case _ if path.startsWith(TablePrefix) =>
+      val name = path.stripPrefix(TablePrefix)
       try {
         // encoded before the cap, so the plan's root is a CollectLimit
         val body = Warehouse.jsonRecords(Warehouse.table(spark, name)).limit(100)
