@@ -1,8 +1,8 @@
 package graft.serving
 
-import java.net.InetSocketAddress
+import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -15,6 +15,7 @@ import graft.etl.StarSchema
 import graft.ml.Forecast
 import graft.queries.ServingQueries
 import graft.queries.ServingQueries.FactAggregates
+import graft.serving.CountryBodies.{ByCountryPath, GraphPrefix}
 
 /** Thin HTTP shell over the serving layer — the analog of the reference's
   * Flask app (app/main.py:27-43 registers blueprints whose route bodies are
@@ -49,69 +50,46 @@ import graft.queries.ServingQueries.FactAggregates
   *  - `total_cases`, `total_deaths`, `total_vaccines` and the three
   *    `worldmap` routes read the per-country totals and shots;
   *  - `top5_summary` reads the per-`country_name` totals;
-  *  - `weekly_statistics_by_country` (through the index below) and
-  *    `weekly_statistics_total` read the stored weekly join; the latter's
-  *    `total_rows` is the stored count.
+  *  - `weekly_statistics_by_country` and `weekly_statistics_total` read
+  *    the stored weekly join; the latter's `total_rows` is the stored count.
   * Their results are exact: every summed column is an integer type, so a
   * sum of per-country partial sums equals the direct sum, nulls included.
   * The served star is immutable (no CRUD route writes to it), so the
   * aggregates never need invalidating. They are not registered in the
   * catalog, so `/api/table/<name>` still serves only the six star tables.
   *
-  * The one-country routes (`weekly_statistics_by_country`,
-  * `graph/country/<metric>`) answer from an index built at start
-  * ([[CountryIndex]]): every country's by-country body and its `cases`,
-  * `deaths` and `vaccinated` graph bodies, encoded by Spark's own JSON
-  * writer (`to_json(struct(…))`, the writer behind `toJSON`) and kept as
-  * UTF-8 bytes by country code. Building it is two Spark jobs, one
-  * projection of the stored weekly join (by-country, cases and deaths
-  * records) and one of the daily vaccination fact; the driver groups the
-  * records by code and sorts each country's by date. On the reference's
-  * size (240 countries × 261 weeks) the bodies are about 9 MB of UTF-8. A
-  * request then runs no job: an unknown code answers `[]` by country and
-  * the `no data for country` 404 by graph; a missing parameter or an
-  * unknown metric is still a 400. These answers are not also memoized. If
-  * the bodies would exceed [[MemoBudgetBytes]], the server keeps no index
-  * and each cold key is one Spark job with no exchange, as before: the
-  * route filters its country's rows and sorts them in one partition
-  * (`coalesce(1).sortWithinPartitions`), in one task that scans the whole
-  * stored table it reads.
-  *
-  * `/api/table/<name>` encodes rows before its 100-row cap, so its plan is a
-  * `CollectLimit` over the scan, with no exchange. For the six views `start`
-  * registers, the capped body is computed on a name's first request and
-  * kept; it is served while the session catalog still resolves the name to
-  * that same registered view, a driver-side lookup that runs no job. A
-  * name a caller has re-registered, or any other name, runs the capped
-  * scan on every request.
-  *
-  * Repeat reads run no Spark job. The answer of a memoized route is a pure
-  * function of the stored star, the stored aggregates, the weekly fact's row
-  * count and the request's parameters, all fixed once `start` returns. So
-  * its response body is stored, by route path plus decoded query parameters
-  * in sorted order ([[BodyMemo]]), and a repeat request writes the stored
-  * bytes with the same status and `Content-Type`. A miss runs the route as
-  * it always ran and holds no lock while it does. Memoized:
-  *  - every route of [[routes]] and [[dataRoutes]], the evolution routes
-  *    included, which therefore aggregate a fact once per key per server;
-  *  - `weekly_statistics_total`, for valid parameters;
-  *  - `top5_summary`;
-  *  - `graph/country/<metric>` and `weekly_statistics_by_country`, when the
-  *    server keeps no one-country index: the graph route's 200 bodies and
-  *    its `no data for country` 404, which the data decides.
-  * Not memoized, because their answer is not a function of the stored star:
-  *  - `table/<name>` reads the session catalog, which any caller can
-  *    re-register (its stored bodies are the view rule above);
-  *  - `country_covid_rates` reads the caller's `population` DataFrame;
-  *  - `metrics`, `predict_cases` and `predicted_weekly_statistics` fit or
-  *    read models; the last is already one bounded job per request, which
-  *    ServeSpec pins;
-  *  - `encoding` probes the live catalog, `/health` the server, and the
-  *    CRUD paths read tables that writes change;
-  *  - no 400 or 500 answer is stored.
-  * The memo holds at most [[MemoBudgetBytes]] (64 MiB) of body bytes plus
-  * key characters, fixed in code; an insert that would exceed it clears the
-  * memo first, and a larger body is served but not stored.
+  * Every `/api` answer goes through one response store ([[ResponseStore]])
+  * by route path plus decoded query parameters in sorted order: a request
+  * looks its key up once and, on a miss, runs the route and offers the
+  * answer back, holding no lock while the route runs. The store holds:
+  *  - pinned entries: every country's `weekly_statistics_by_country` body
+  *    and its `cases`, `deaths` and `vaccinated` `graph/country` bodies,
+  *    encoded at start in two Spark jobs by Spark's own JSON writer
+  *    ([[CountryBodies]]; about 9 MB of UTF-8 at the reference's 240
+  *    countries × 261 weeks). Each is keyed by the one parameter its route
+  *    reads, so a request with extra parameters still hits it. The family
+  *    is complete, so a code it lacks has no rows: `[]` by country, the
+  *    `no data for country` 404 by graph, with no job and nothing stored;
+  *  - memoized entries: the first answer of every other route of [[routes]]
+  *    and [[dataRoutes]] (the evolution routes included, which therefore
+  *    aggregate a fact once per key per server), `weekly_statistics_total`
+  *    and `top5_summary`, each a pure function of the stored star, the
+  *    stored aggregates, the fact's row count and the parameters;
+  *  - guarded entries: the capped body of `table/<name>` for the six views
+  *    `start` registers, served only while the session catalog still
+  *    resolves the name to that same view (a driver-side check that runs no
+  *    job) and stored only if it still does after the scan. Any other name,
+  *    or a re-registered one, runs the capped scan on every request; rows
+  *    are encoded before the 100-row cap, so its plan is a `CollectLimit`
+  *    over the scan, with no exchange.
+  * Never stored: `country_covid_rates` (it reads the caller's `population`),
+  * `metrics`, `predict_cases` and `predicted_weekly_statistics` (they fit or
+  * read models; the last is one bounded job per request, which ServeSpec
+  * pins), `encoding` (it probes the live catalog), `/health`, the CRUD
+  * paths, and any answer but a 200. The memoized and guarded entries hold
+  * at most [[MemoBudgetBytes]] (64 MiB) of body bytes plus key characters
+  * on top of the pinned ones; an insert that would exceed it first drops
+  * them all, and a larger body is served but not stored.
   *
   * Requests run on a pool of daemon dispatcher threads sized to the
   * session's `defaultParallelism`, so concurrent clients overlap instead of
@@ -166,45 +144,29 @@ object Serve {
     params.get(name).fold(default)(v => v.toIntOption.filter(_ >= 1)
       .getOrElse(throw new BadRequest(s"$name must be an integer >= 1, got '$v'")))
 
-  /** The response memo's budget: UTF-8 body bytes plus key characters. It
-    * also bounds the one-country index ([[CountryIndex]]). */
+  /** What the response store may hold on top of its pinned bodies: UTF-8
+    * body bytes plus key characters. */
   private[serving] val MemoBudgetBytes: Long = 64L << 20
 
   /** Keep-alive connections the JDK server keeps open while idle (its
     * `sun.net.httpserver.maxIdleConnections`, default 200). */
   private[serving] val MaxIdleConnections = 10000
 
-  private val GraphPrefix = "/api/graph/country/"
   private val TablePrefix = "/api/table/"
 
-  private def noData(country: String): String = err(s"no data for country '$country'")
-
-  /** A `graph/country/<metric>` request's country and its metric as
-    * [[ServingQueries.graphCountry]] names it; a missing country or an
-    * unknown metric is a [[BadRequest]]. The reference's METRIC_MAP keys
-    * (graph.py:10-14); "vaccinated" is its daily-shots series (the mapped
-    * columns don't exist — intended semantics per SURVEY.md §1.4).
+  /** A one-country key the pinned bodies lack: its country has no rows. A
+    * missing parameter or an unknown metric is a [[BadRequest]]. The graph
+    * metrics are the reference's METRIC_MAP keys (graph.py:10-14).
     */
-  private def graphRequest(path: String, p: Map[String, String]): (String, String) = {
-    val metric = path.stripPrefix(GraphPrefix)
-    val country = p.getOrElse("country", throw new BadRequest("missing parameter: country"))
-    country -> (metric match {
-      case "cases"      => "cases"
-      case "deaths"     => "deaths"
-      case "vaccinated" => "vaccinations"
-      case _            => throw new BadRequest(s"unknown metric: $metric")
-    })
+  private def noRows(path: String, p: Map[String, String]): Answer = {
+    val name = CountryBodies.param(path)
+    val code = p.getOrElse(name, throw new BadRequest(s"missing parameter: $name"))
+    if (path == ByCountryPath) Answer(200, "[]")
+    else path.stripPrefix(GraphPrefix) match {
+      case "cases" | "deaths" | "vaccinated" => Answer(404, err(s"no data for country '$code'"))
+      case metric => throw new BadRequest(s"unknown metric: $metric")
+    }
   }
-
-  /** A one-country route's answer from `index`; None for any other path. */
-  private def indexed(index: CountryIndex, path: String,
-      p: Map[String, String]): Option[(Int, Array[Byte])] =
-    if (path == "/api/weekly_statistics_by_country")
-      Some(200 -> index.weeklyByCountry(p("country_code")))
-    else if (path.startsWith(GraphPrefix)) {
-      val (country, metric) = graphRequest(path, p)
-      Some(index.series(metric, country).fold(404 -> utf8(noData(country)))(200 -> _))
-    } else None
 
   /** Plain-array routes (the reference's `fetch_data` shape,
     * app/routes/data.py:63-106, 180-214): per-table scans + totals +
@@ -245,10 +207,13 @@ object Serve {
   def dataRoutes(star: StarSchema): Map[String, Map[String, String] => DataFrame] =
     dataRoutes(star, ServingQueries.factAggregates(star))
 
+  private def decode(s: String): String = URLDecoder.decode(s, StandardCharsets.UTF_8)
+
+  /** The request's query parameters, each name and value decoded once. */
   private def queryParams(ex: HttpExchange): Map[String, String] =
-    Option(ex.getRequestURI.getQuery).map(_.split("&").toSeq).getOrElse(Seq.empty)
+    Option(ex.getRequestURI.getRawQuery).toSeq.flatMap(_.split("&"))
       .map(_.split("=", 2))
-      .collect { case Array(k, v) => k -> java.net.URLDecoder.decode(v, "UTF-8") }
+      .collect { case Array(k, v) => decode(k) -> decode(v) }
       .toMap
 
   private def utf8(body: String): Array[Byte] = body.getBytes(StandardCharsets.UTF_8)
@@ -313,10 +278,10 @@ object Serve {
       population: Option[DataFrame] = None): HttpServer =
     serve(star, port, population)._1
 
-  /** [[start]], also returning the server's response memo, which the
+  /** [[start]], also returning the server's response store, which the
     * serving specs inspect. */
   private[serving] def serve(star: StarSchema, port: Int,
-      population: Option[DataFrame]): (HttpServer, BodyMemo) = {
+      population: Option[DataFrame]): (HttpServer, ResponseStore) = {
     val served = star.materialized
     val spark = served.country.sparkSession
     Warehouse.register(spark, served)
@@ -365,16 +330,18 @@ object Serve {
     val crudCountry = new CrudTable(spark, countryStatisticsSchema, Seq("country"))
     val crudRegion = new CrudTable(spark, regionYearlySummarySchema, Seq("who_region", "year"))
 
-    val index = CountryIndex.build(served, agg, MemoBudgetBytes)
-    // the views registered above, each with its capped body once requested
+    val arr = routes(served, agg)
+    val env = dataRoutes(served, agg)
+    val store = new ResponseStore(MemoBudgetBytes, CountryBodies.encode(served, agg))
+    // the guard of each stored route's entries; a `table/<name>` body is
+    // valid while the catalog resolves the name to the view registered
+    // above, a driver-side lookup that runs no job
     val catalog = spark.sessionState.catalog
-    val views = served.tables.flatMap { case (n, _) => catalog.getRawTempView(n).map(n -> _) }.toMap
-    val viewBodies = new ConcurrentHashMap[String, (Int, Array[Byte])]()
-    // the name of a `table/<name>` path whose name the catalog still resolves
-    // to the view registered above: a driver-side lookup, no job
-    def startView(path: String): Option[String] =
-      Some(path.stripPrefix(TablePrefix)).filter(name => path.startsWith(TablePrefix) &&
-        views.get(name).exists(v => catalog.getRawTempView(name).exists(_ eq v)))
+    val tableGuards = served.tables.flatMap { case (n, _) => catalog.getRawTempView(n).map(v =>
+      s"$TablePrefix$n" -> (() => catalog.getRawTempView(n).exists(_ eq v))) }
+    val memoized = (arr.keySet - ByCountryPath) ++ env.keySet +
+      "/api/weekly_statistics_total" + "/api/top5_summary"
+    val guards = memoized.map(_ -> ResponseStore.Always).toMap ++ tableGuards
 
     // before the JVM's first server: the JDK reads both once (scaladoc above)
     sys.props.getOrElseUpdate("sun.net.httpserver.nodelay", "true")
@@ -383,40 +350,27 @@ object Serve {
     server.createContext("/health", (ex: HttpExchange) =>
       respond(ex, 200, """{"status":"running"}"""))
 
-    val arr = routes(served, agg)
-    val env = dataRoutes(served, agg)
-    val memo = new BodyMemo(MemoBudgetBytes)
-    def memoized(path: String): Boolean =
-      arr.contains(path) || env.contains(path) || path == "/api/weekly_statistics_total" ||
-        path == "/api/top5_summary" || path.startsWith(GraphPrefix)
-
     server.createContext("/api", (ex: HttpExchange) => {
       val path = ex.getRequestURI.getPath
       val (status, body) = try {
         val params = queryParams(ex)
-        val view = startView(path)
-        val stored = index.flatMap(indexed(_, path, params))
-          .orElse(view.flatMap(n => Option(viewBodies.get(n))))
-        val key = if (memoized(path)) Some(BodyMemo.key(path, params)) else None
-        stored.orElse(key.flatMap(memo.get)).getOrElse {
+        val oneCountry = path == ByCountryPath || path.startsWith(GraphPrefix)
+        val key = ResponseStore.key(path,
+          if (oneCountry) params.filter(_._1 == CountryBodies.param(path)) else params)
+        store.get(key).getOrElse {
           val a = (arr.get(path), env.get(path)) match {
+            case _ if oneCountry => noRows(path, params)
             case (Some(fn), _) => Answer(200, jsonArray(fn(params)))
             case (_, Some(fn)) => Answer(200, s"""{"data":${jsonArray(fn(params))}}""")
             case _ => handleSpecial(path, params, served, agg, factRows, spark, population,
               () => predicted, () => metricsJson, rfModelFor)
           }
           val answer = (a.status, utf8(a.body))
-          // 400 and 500 answers are never stored; 404 is graph's data-derived one
-          if (a.status == 200 || a.status == 404) key.foreach(memo.put(_, answer))
-          // kept only if the view was the registered one after the scan too
-          if (a.status == 200)
-            view.filter(_ => startView(path).isDefined).foreach(viewBodies.put(_, answer))
+          if (a.status == 200) guards.get(path).foreach(store.put(key, answer, _))
           answer
         }
       } catch {
         case e: BadRequest => (400, utf8(err(e.getMessage)))
-        case e: NoSuchElementException =>
-          (400, utf8(err(s"missing parameter: ${e.getMessage}")))
         case e: Exception =>
           (500, utf8(err(Option(e.getMessage).getOrElse(e.getClass.getSimpleName))))
       }
@@ -451,7 +405,7 @@ object Serve {
     pool.allowCoreThreadTimeOut(true)
     server.setExecutor(pool)
     server.start()
-    (server, memo)
+    (server, store)
   }
 
   /** OpenAPI 3 description of the CRUD tables (the reference's Swagger
@@ -545,13 +499,6 @@ object Serve {
     case "/api/encoding" =>
       Warehouse.listTables(spark) // throws if the catalog is gone → 500
       Answer(200, """{"server_encoding":"UTF8","client_encoding":"UTF8"}""")
-
-    // per-country metric series (graph.py:10-52): /api/graph/country/<metric>
-    case _ if path.startsWith(GraphPrefix) =>
-      val (country, metric) = graphRequest(path, p)
-      val rows = Warehouse.jsonRecords(ServingQueries.graphCountry(star, country, metric)).collect()
-      if (rows.isEmpty) Answer(404, noData(country))
-      else Answer(200, s"""{"data":${rows.mkString("[", ",", "]")}}""")
 
     // generic capped scan (tables.py:26-40): {"<name>": […]}
     case _ if path.startsWith(TablePrefix) =>
@@ -681,10 +628,6 @@ object Serve {
   private def handleCrud(ex: HttpExchange, prefix: String, table: CrudTable,
       schema: StructType, pks: Seq[String]): Unit = {
     val path = ex.getRequestURI.getPath
-    val rest = path.stripPrefix(prefix).stripPrefix("/")
-    val keyParts = if (rest.isEmpty) Seq.empty
-      else rest.split("/").toSeq.map(java.net.URLDecoder.decode(_, "UTF-8"))
-
     // a path key parses like Flask's `<int:year>` converter: one that does
     // not matches no route
     object Key {
@@ -714,6 +657,10 @@ object Serve {
       }.toMap
 
     try {
+      // each path segment decoded once; a `+` in a path is a `+`
+      val rest = ex.getRequestURI.getRawPath.stripPrefix(prefix).stripPrefix("/")
+      val keyParts = if (rest.isEmpty) Seq.empty
+        else rest.split("/").toSeq.map(seg => decode(seg.replace("+", "%2B")))
       (ex.getRequestMethod, keyParts) match {
         case ("GET", Seq()) =>
           respond(ex, 200, jsonArray(table.all))

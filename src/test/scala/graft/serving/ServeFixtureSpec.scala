@@ -21,7 +21,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkSpec, Warehouse, WhoFixture}
-import graft.etl.{EtlJob, StarSchema}
+import graft.etl.EtlJob
 import graft.queries.ServingQueries
 
 /** Serving over a tiny WHO-shaped CSV trio written here, so it runs without
@@ -35,16 +35,17 @@ import graft.queries.ServingQueries
   * every read route keeps answering, byte for byte, after the CSVs are
   * deleted; the routes over its stored fact aggregates answer what
   * aggregating the star's facts answers, in a bounded number of jobs; a
-  * memoized route answers a repeat request with the body computed from the
-  * star and runs no Spark job, within the memo's byte budget, while the
-  * excluded routes and the CRUD reads compute per request; and requests run
-  * on a dispatcher pool, so a client slow to send its body does not hold up
-  * the others and concurrent clients each read their own writes. It also
-  * pins each request's fixed costs: no delayed-ACK stall on keep-alive
-  * connections, no lost write once many connections sit idle, no Spark job
-  * for a CRUD request, a cold one-country key (answered from the index built
-  * at start, byte for byte the `orderBy` form's body) or a repeat table read
-  * of an unchanged star view, and no exchange under a capped table scan.
+  * stored route answers a repeat request with the body computed from the
+  * star and runs no Spark job, within the response store's byte budget,
+  * while the excluded routes and the CRUD reads compute per request; and
+  * requests run on a dispatcher pool, so a client slow to send its body does
+  * not hold up the others and concurrent clients each read their own writes.
+  * It also pins each request's fixed costs: no delayed-ACK stall on
+  * keep-alive connections, no lost write once many connections sit idle, no
+  * Spark job for a CRUD request, a cold one-country key (answered from the
+  * bodies pinned at start, byte for byte the `orderBy` form's body) or a
+  * repeat table read of an unchanged star view, and no exchange under a
+  * capped table scan. Query parameters and CRUD path keys are decoded once.
   */
 class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
 
@@ -84,7 +85,7 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
 
   /** The ETL's lineage star over the CSVs; `Serve.start` stores its own copy. */
   private lazy val star = EtlJob.run(spark, dataDir.toString)
-  private lazy val (server, memo) = Serve.serve(star, port = 0, population = None)
+  private lazy val (server, store) = Serve.serve(star, port = 0, population = None)
 
   override def afterAll(): Unit = {
     try server.stop(0)
@@ -287,11 +288,15 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
 
   test("a memoized route answers its first and repeat requests with the body computed from the star") {
     val answered = memoizedRequests.map { case (path, params) =>
-      val key = BodyMemo.key(path, params)
-      assert(memo.get(key).isEmpty, s"$key requested before")
+      val key = ResponseStore.key(path, params)
+      val before = store.get(key)
       val first = get(url(path, params))
-      // the one-country routes answer from the index built at start instead
-      assert(memo.get(key).isDefined == !oneCountry(path), s"$key: stored ${memo.get(key).isDefined}")
+      // a one-country key is pinned at start if its country has rows, and a
+      // miss is not stored; any other key is stored by its first request
+      val pinned = oneCountry(path) && first._1 == 200 && first._2 != "[]"
+      assert(before.isDefined == pinned, s"$key: present before its first request ${before.isDefined}")
+      assert(store.get(key).isDefined == (pinned || !oneCountry(path)),
+        s"$key: stored ${store.get(key).isDefined}")
       val (jobs, _) = sparkWork {
         assert(get(url(path, params)) == first, s"$key: repeat")
       }
@@ -305,10 +310,10 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
       (Seq("cases", "deaths", "vaccinated").map(m => s"/api/graph/country/$m?country=ZZ") :+
         "/api/graph/country/vaccinated?country=XA").toSet, answered)
     assert(get(url("/api/weekly_statistics_by_country", Map("country_code" -> "ZZ"))) == (200 -> "[]"))
-    assert(memo.size > 0 && memo.size <= Serve.MemoBudgetBytes)
+    assert(store.size > 0 && store.size <= Serve.MemoBudgetBytes)
   }
 
-  test("routes the memo excludes are not stored in it; a table/<name> repeat runs no job while its view is unchanged") {
+  test("a star view's table/<name> body is kept while its view is unchanged") {
     for (path <- Seq("/api/table/disease", "/api/table/weekly_statistics",
         "/api/predicted_weekly_statistics")) {
       val first = get(path)
@@ -319,7 +324,8 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
         if (path.startsWith("/api/table/")) assert(jobs == 0, s"$path ran $jobs Spark jobs")
         else assert(jobs >= 1, s"$path ran no Spark job")
       }
-      assert(memo.get(BodyMemo.key(path, Map.empty)).isEmpty, path)
+      // a star view's body is a guarded entry; a model's answer is not stored
+      assert(store.get(ResponseStore.key(path, Map.empty)).isDefined == path.startsWith("/api/table/"), path)
     }
     // a view re-registered under a served name: the route answers its rows,
     // by the capped scan, on every request
@@ -333,13 +339,14 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
           """{"disease":[{"id":0,"name":"other-0"},{"id":1,"name":"other-1"},{"id":2,"name":"other-2"}]}""")))
         assert(jobs >= 1, "a re-registered view ran no Spark job")
       }
+      assert(store.get(ResponseStore.key("/api/table/disease", Map.empty)).isEmpty)
     } finally served.createOrReplaceTempView("disease")
     assert(get("/api/table/disease") == before)
     // nor is an unknown metric's or a missing parameter's 400 stored
     assert(get("/api/graph/country/nonsense?country=FR")._1 == 400)
     assert(get("/api/weekly_statistics_by_country")._1 == 400)
-    assert(memo.get(BodyMemo.key("/api/graph/country/nonsense", Map("country" -> "FR"))).isEmpty)
-    assert(memo.get(BodyMemo.key("/api/weekly_statistics_by_country", Map.empty)).isEmpty)
+    assert(store.get(ResponseStore.key("/api/graph/country/nonsense", Map("country" -> "FR"))).isEmpty)
+    assert(store.get(ResponseStore.key("/api/weekly_statistics_by_country", Map.empty)).isEmpty)
   }
 
   test("weekly_statistics_total answers 400 to a non-integer, page < 1 or limit < 1") {
@@ -352,7 +359,7 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
         assert(new ObjectMapper().readTree(body).path("error").asText().contains("must be an integer >= 1"),
           s"$params: $body")
       }
-      assert(memo.get(BodyMemo.key("/api/weekly_statistics_total", params)).isEmpty, params)
+      assert(store.get(ResponseStore.key("/api/weekly_statistics_total", params)).isEmpty, params)
     }
     // a page whose offset overflows an Int is past every row: empty, not a 500
     val (code, body) = get(s"/api/weekly_statistics_total?page=3&limit=${Int.MaxValue}")
@@ -406,27 +413,71 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
     }
   }
 
+  test("an escaped & in a query value is part of the value") {
+    // the code is `FR&x`, which has no rows, not `FR`
+    assert(get("/api/weekly_statistics_by_country?country_code=FR%26x") == (200 -> "[]"))
+  }
+
+  test("an escaped % in a query value is decoded once") {
+    assert(get("/api/graph/country/cases?country=100%25") ==
+      (404 -> """{"error":"no data for country '100%'"}"""))
+  }
+
+  test("an escaped % in a CRUD path key is decoded once") {
+    try {
+      assert(request("POST", "/country_statistics", Some("""{"country":"100%","total_cases":1}"""))._1 == 201)
+      assert(get("/country_statistics/100%25") ==
+        (200 -> """{"country":"100%","total_cases":1,"total_vaccinated":0}"""))
+    } finally request("DELETE", "/country_statistics/100%25")
+  }
+
+  test("an escaped / in a CRUD path key stays in its segment, and a + stays a +") {
+    try {
+      assert(request("POST", "/country_statistics", Some("""{"country":"A/B+C","total_cases":1}"""))._1 == 201)
+      assert(get("/country_statistics/A%2FB+C") ==
+        (200 -> """{"country":"A/B+C","total_cases":1,"total_vaccinated":0}"""))
+    } finally request("DELETE", "/country_statistics/A%2FB+C")
+  }
+
   test("the memo never stores more than its budget") {
     val budget = 1000L
-    val m = new BodyMemo(budget)
+    val pinnedKey = ResponseStore.key("/api/weekly_statistics_by_country", Map("country_code" -> "P"))
+    val pinnedBody = Array.fill[Byte](600)('p'.toByte)
+    val pinnedCost = pinnedBody.length + pinnedKey.length
+    val m = new ResponseStore(budget, Map(pinnedKey -> (200 -> pinnedBody)))
+    assert(m.size == pinnedCost)
     val body = Array.fill[Byte](90)('x'.toByte)
     for (i <- 0 until 100) {
-      val key = BodyMemo.key("/api/graph/country/cases", Map("country" -> s"C$i"))
+      val key = ResponseStore.key("/api/graph/country/cases", Map("country" -> s"C$i"))
       m.put(key, 200 -> body)
-      assert(m.size <= budget, s"after $i inserts: ${m.size}")
+      // the budget bounds what is put on top of the pinned entries, which
+      // every overflow clear keeps
+      assert(m.size > pinnedCost && m.size <= pinnedCost + budget, s"after $i inserts: ${m.size}")
       assert(m.get(key).exists(_._2 sameElements body), key)
+      assert(m.get(pinnedKey).exists(_._2 sameElements pinnedBody), s"after $i inserts")
     }
     // a body larger than the budget is not stored, and evicts nothing
     val before = m.size
     m.put("/api/disease?", 200 -> Array.fill[Byte](budget.toInt + 1)('y'.toByte))
     assert(m.get("/api/disease?").isEmpty)
     assert(m.size == before)
-    // a repeat insert of a stored key is not counted twice
-    val key = BodyMemo.key("/api/graph/country/cases", Map("country" -> "C99"))
+    // a repeat insert of a stored key is not counted twice, nor is a pinned key replaced
+    val key = ResponseStore.key("/api/graph/country/cases", Map("country" -> "C99"))
     m.put(key, 200 -> body)
+    m.put(pinnedKey, 200 -> body)
     assert(m.size == before)
+    assert(m.get(pinnedKey).exists(_._2 sameElements pinnedBody))
+    // a guarded entry is stored only if its guard holds, and served only while it does
+    var valid = false
+    m.put("/api/table/t?", 200 -> body, () => valid)
+    valid = true
+    assert(m.get("/api/table/t?").isEmpty && m.size == before)
+    m.put("/api/table/u?", 200 -> body, () => valid)
+    assert(m.get("/api/table/u?").exists(_._2 sameElements body))
+    valid = false
+    assert(m.get("/api/table/u?").isEmpty)
     // parameter maps that would print alike have different keys
-    assert(BodyMemo.key("/api/x", Map("a" -> "1&b=2")) != BodyMemo.key("/api/x", Map("a" -> "1", "b" -> "2")))
+    assert(ResponseStore.key("/api/x", Map("a" -> "1&b=2")) != ResponseStore.key("/api/x", Map("a" -> "1", "b" -> "2")))
   }
 
   test("predict_cases model=lstm answers 503 naming the missing checkpoint or encoder") {
@@ -531,7 +582,7 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
     // its repeat is a memo hit
     def missThenHit(warmPath: String, fresh: String): (Int, Seq[String]) = {
       assert(get(warmPath)._1 == 200, warmPath)
-      assert(memo.get(BodyMemo.key(fresh.takeWhile(_ != '?'), queryOf(fresh))).isEmpty, fresh)
+      assert(store.get(ResponseStore.key(fresh.takeWhile(_ != '?'), queryOf(fresh))).isEmpty, fresh)
       val miss = sparkWork(assert(get(fresh)._1 == 200, fresh))
       val (hitJobs, _) = sparkWork(assert(get(fresh)._1 == 200, fresh))
       assert(hitJobs == 0, s"$fresh repeat ran $hitJobs jobs")
@@ -553,7 +604,7 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
   test("keep-alive requests are not held back by the client's delayed ACK") {
     val path = "/api/disease"
     assert(get(path)._1 == 200)
-    assert(memo.get(BodyMemo.key(path, Map.empty)).isDefined)
+    assert(store.get(ResponseStore.key(path, Map.empty)).isDefined)
     val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
     val req = HttpRequest.newBuilder(
       URI.create(s"http://localhost:${server.getAddress.getPort}$path")).GET().build()
@@ -655,22 +706,21 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
     assert(cold.forall(_._2 == 0), cold)
   }
 
-  test("the one-country index holds the orderBy form's bodies for every code and metric") {
-    val stored = star.materialized
-    val agg = ServingQueries.factAggregates(stored, StarSchema.stored)
-    val index = CountryIndex.build(stored, agg, Serve.MemoBudgetBytes).get
-    def text(b: Array[Byte]) = new String(b, StandardCharsets.UTF_8)
+  test("the pinned one-country bodies are the orderBy form's for every code") {
+    // the pinned entries, read from the store without a request; a code they
+    // lack answers the empty array or the graph 404
+    def pinned(path: String, params: Map[String, String]): Option[(Int, String)] =
+      store.get(ResponseStore.key(path, params)).map { case (s, b) => s -> new String(b, StandardCharsets.UTF_8) }
     for (code <- codes.map(_._1) :+ "QQ") {
-      assert(text(index.weeklyByCountry(code)) == array(byCountryOrdered(code)), code)
-      for ((metric, name) <- Seq("cases" -> "cases", "deaths" -> "deaths", "vaccinated" -> "vaccinations")) {
-        val want = graphOrdered(metric, code)
-        assert(index.series(name, code).map(b => 200 -> text(b))
-          .getOrElse(404 -> s"""{"error":"no data for country '$code'"}""") == want, s"$metric $code")
+      assert(pinned("/api/weekly_statistics_by_country", Map("country_code" -> code))
+        .getOrElse(200 -> "[]") == (200 -> array(byCountryOrdered(code))), code)
+      for (metric <- Seq("cases", "deaths", "vaccinated")) {
+        assert(pinned(s"/api/graph/country/$metric", Map("country" -> code))
+          .getOrElse(404 -> s"""{"error":"no data for country '$code'"}""") == graphOrdered(metric, code),
+          s"$metric $code")
       }
     }
-    // bodies past the budget: no index, so the server keeps the per-request path
-    assert(index.size > 0)
-    assert(CountryIndex.build(stored, agg, index.size - 1).isEmpty)
+    assert(pinned("/api/weekly_statistics_by_country", Map("country_code" -> "QQ")).isEmpty)
   }
 
   test("table/<name> encodes before its cap, so its plan has no exchange") {
@@ -739,13 +789,14 @@ class ServeFixtureSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
       s"""[{"total_reported_shots":${1500000L + 2 * 22964750L + 300000L}}]""")
 
     // keys no request has made, answered from the lineage star while its
-    // CSVs exist, then requested (memo misses) once they are gone
+    // CSVs exist, then requested once they are gone: BR's one-country bodies
+    // are pinned at start, the page is a store miss
     val fresh = Seq(
       "/api/weekly_statistics_by_country" -> Map("country_code" -> "BR"),
       "/api/weekly_statistics_total" -> Map("page" -> "3", "limit" -> "4"),
       "/api/graph/country/deaths" -> Map("country" -> "BR"))
     val expected = fresh.map { case (path, params) =>
-      assert(memo.get(BodyMemo.key(path, params)).isEmpty, path)
+      assert(store.get(ResponseStore.key(path, params)).isDefined == oneCountry(path), path)
       val want = direct(path, params)
       assert(want._1 == 200 && want._2.length > 20, s"$path: $want")
       want
