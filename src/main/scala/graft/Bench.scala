@@ -1,13 +1,48 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.util.{Profile, QueryProfile}
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line (driver contract). A warmup action runs first so the
   * first measured query doesn't absorb session/codegen/file-index startup;
-  * queries run in sorted-name order for run-to-run comparability.
+  * queries run in sorted-name order for run-to-run comparability. Every
+  * sample is one `QueryProfile` window around building and running the
+  * query, and prints one `[bench] <q> rep <r>: ...` line to stderr.
+  *
+  * Environment:
+  *  - `SPARK_GRAFT_SF_DIR`: the parquet directory (default: the sf0.1 test data);
+  *  - `SPARK_GRAFT_BENCH_OUT`: the artifact file (default BENCH.json);
+  *  - `SPARK_GRAFT_REPS`: the configured reps (default 3);
+  *  - `SPARK_GRAFT_ONLY`: comma-separated query names to run (default all),
+  *    interleaved within each rep, which makes a paired same-window A/B;
+  *  - `SPARK_GRAFT_TIMING_MODE`: `rdd` times `queryExecution.toRdd.count()`
+  *    in place of `count()`;
+  *  - `SPARK_GRAFT_BUDGET_SEC`: the wall budget past which reps after the
+  *    first, extra reps, rerun passes and the rdd pass stop (default 900);
+  *  - `SPARK_GRAFT_HARD_CAP_SEC`: the ceiling past which even rep 1 skips
+  *    the remaining queries (default 1500).
   */
 object Bench {
+  private val Mapper = new ObjectMapper()
+
+  /** One rep entry (a full rep or a rerun pass): its entry fault-rate probe,
+    * the lowest probe seen while it ran, the process user/sys CPU summed over
+    * its samples, the samples it measured, and its storm stamp once done. */
+  private final class Rep(val probe: Double) {
+    var minProbe: Double = probe
+    var usr = 0.0
+    var sys = 0.0
+    var samples = 0
+    var storm = false
+  }
+
+  /** One sample of one query: the index of the rep entry it ran in, and its
+    * profile, or None when it failed or was skipped. */
+  private final case class Sample(rep: Int, profile: Option[Profile])
+
   /** First-touch MB/s measured by the pre-touch pass (artifact metadata). */
   private var pretouchMbps: Double = -1.0
 
@@ -59,12 +94,9 @@ object Bench {
       // regions for each 64 MB humongous array with nothing reclaimable —
       // fragmentation (or maxMemory over-report) can OOM the bench before
       // any query runs. The catch below degrades to partial pre-touch
-      // instead of dying, and the env knobs parse defensively.
-      val defaultMb = (Runtime.getRuntime.maxMemory() / (1 << 20) * 80 / 100).toInt
-      val mb = sys.env.get("SPARK_GRAFT_PRETOUCH_MB")
-        .flatMap(_.toIntOption).getOrElse(defaultMb)
-      val boxSec = sys.env.get("SPARK_GRAFT_PRETOUCH_BOX_SEC")
-        .flatMap(_.toIntOption).getOrElse(240)
+      // instead of dying.
+      val mb = (Runtime.getRuntime.maxMemory() / (1 << 20) * 80 / 100).toInt
+      val boxSec = 240
       val t0 = System.nanoTime()
       var touched = 0
       val hold = new scala.collection.mutable.ArrayBuffer[Array[Byte]]()
@@ -192,8 +224,7 @@ object Bench {
     // count, up to maxExtraReps more run — budget-boxed and storm-gated
     // like any other rep — before the artifact is published; clean_reps in
     // the artifact says what actually backs the headline.
-    val maxExtraReps = sys.env.get("SPARK_GRAFT_MAX_EXTRA_REPS")
-      .flatMap(_.toIntOption).getOrElse(2)
+    val maxExtraReps = 2
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BUDGET_SEC", "900").toDouble
     // Absolute ceiling covering rep 1 too: past it, remaining queries are
     // skipped (recorded -1) so the JSON artifact still gets emitted before
@@ -215,43 +246,15 @@ object Bench {
     // count() plans (column pruning to a bare scan-count, as-of join
     // elimination) don't fire. count() remains the default contract mode;
     // rdd mode is the honest census for composed plans whose rows a real
-    // consumer would materialize (the round-11 DbgStages forensics: q31's
-    // union+window never executes under count()).
+    // consumer would materialize (q31's union+window never executes under
+    // count()).
     val rddMode = sys.env.get("SPARK_GRAFT_TIMING_MODE").contains("rdd")
     val timingMode = if (rddMode) "rdd" else "count"
-    // executor CPU time per query: contention-immune signal alongside wall
-    // time (a busy host inflates wall but not CPU). Snapshots are fenced by
-    // draining the async listener bus before reading the counter.
-    val cpuListener = new graft.util.CpuTimeListener
-    spark.sparkContext.addSparkListener(cpuListener)
-    def cpuNow(): Long = {
-      org.apache.spark.graftaccess.GraftSparkAccess
-        .drainListenerBus(spark.sparkContext)
-      cpuListener.totalNanos
-    }
-    // whole-process user/sys CPU from /proc/self/stat (utime/stime, fields
-    // 14/15): executorCpuTime can't distinguish "plan did more work" from
-    // "host faulted anonymous memory under us" (sys time counts toward
-    // thread CPU) — the round-7 forensics on s08/sp01 took a manual git
-    // diff to dismiss. With per-query stime in the artifact, a
-    // memory-pathology window is machine-separable from a real regression.
-    def procUserSys(): (Double, Double) =
-      try {
-        val stat = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/self/stat")),
-          java.nio.charset.StandardCharsets.US_ASCII)
-        // comm (field 2) may contain spaces — fields restart after last ')'
-        val rest = stat.substring(stat.lastIndexOf(')') + 2).split(" ")
-        val hz = 100.0 // USER_HZ: 100 on every mainstream Linux
-        (rest(11).toDouble / hz, rest(12).toDouble / hz)
-      } catch { case _: Throwable => (-1.0, -1.0) }
-    val times = scala.collection.mutable.Map.empty[String, Vector[Double]]
-    val cpus_ = scala.collection.mutable.Map.empty[String, Vector[Double]]
-    val usrs = scala.collection.mutable.Map.empty[String, Vector[Double]]
-    val syss = scala.collection.mutable.Map.empty[String, Vector[Double]]
-    // which rep produced each appended sample (later reps can skip queries
-    // on budget exhaustion, so vector position ≠ rep number)
-    val repOf = scala.collection.mutable.Map.empty[String, Vector[Int]]
+    // Every sample of every query, in run order. A later rep can skip a
+    // query on budget exhaustion, so a sample carries the rep entry it ran
+    // in; a failed or skipped sample carries no profile.
+    val samples = scala.collection.mutable.Map.empty[String, Vector[Sample]]
+      .withDefaultValue(Vector.empty)
     // Storm gating (round-8 verdict): the harness must refuse to be fooled
     // by the box's anonymous-memory fault storms. Before each rep, probe
     // the CURRENT fault rate; below the floor, wait (bounded) for a clean
@@ -259,20 +262,9 @@ object Bench {
     // Each rep is stamped storm:true/false — probe-rate OR sys-fraction —
     // so a partially-clean run still yields per-query valid medians (clean
     // reps preferred below).
-    val stormFloorMbps = sys.env.get("SPARK_GRAFT_STORM_FLOOR_MBPS")
-      .flatMap(_.toIntOption).getOrElse(300)
-    val stormWaitSec = sys.env.get("SPARK_GRAFT_STORM_WAIT_SEC")
-      .flatMap(_.toIntOption).getOrElse(120)
-    val repProbe = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val repMinProbe = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val repStorm = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-    val repUsrTot = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val repSysTot = scala.collection.mutable.ArrayBuffer.empty[Double]
-    // valid samples recorded per rep: a rep whose budget expired before its
-    // first query (possible after up to 120 s of storm-wait sleeping) must
-    // not count toward clean_reps off its entry probe alone (round-12
-    // advice) — the stamp would claim a backing rep that measured nothing
-    val repSamples = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val stormFloorMbps = 300
+    val stormWaitSec = 120
+    val repLog = scala.collection.mutable.ArrayBuffer.empty[Rep]
     // mid-rep probes: the first clean-gated run (r9) showed the storm can
     // arrive BETWEEN rep-start probes (all three probes 1.5-3.4 GB/s, yet
     // d10's worst rep was 25x its best with sys 5x usr) — so the fault
@@ -288,14 +280,13 @@ object Bench {
     // queries, while storm reps show 0.8-5x (r8 driver bench 1.64, r9
     // first attempt d10 rep at 5.2). Raw per-rep sys/usr is in the
     // artifact so the cut can be re-judged post-hoc.
-    def stormStampOf(i: Int): Boolean =
-      (repMinProbe(i) >= 0 && repMinProbe(i) < stormFloorMbps) ||
-        (repUsrTot(i) > 0 && repSysTot(i) >= 0.5 * repUsrTot(i))
+    def stormStamp(r: Rep): Boolean =
+      (r.minProbe >= 0 && r.minProbe < stormFloorMbps) ||
+        (r.usr > 0 && r.sys >= 0.5 * r.usr)
     // only reps that actually measured something count as clean backing
     // (round-12 advice: a zero-sample rep's clean entry probe is not
     // evidence the medians are storm-free)
-    def cleanSoFar: Int =
-      repStorm.indices.count(i => !repStorm(i) && repSamples(i) > 0)
+    def cleanSoFar: Int = repLog.count(r => !r.storm && r.samples > 0)
     // bounded storm-wait before a rep/pass: below the fault-rate floor,
     // sleep for a clean window rather than publishing storm numbers
     def acquireWindow(label: String): Double = {
@@ -311,57 +302,52 @@ object Bench {
       }
       probe
     }
-    // open a new entry in the per-rep bookkeeping arrays; returns its index
+    // open a new rep entry; returns its index
     def openRep(label: String): Int = {
-      val probe = acquireWindow(label)
-      repProbe += probe
-      repMinProbe += probe
-      repUsrTot += 0.0
-      repSysTot += 0.0
-      repSamples += 0
+      repLog += new Rep(acquireWindow(label))
       sinceProbe = 0
-      repProbe.size - 1
+      repLog.size - 1
     }
-    // one measured sample of one query, appended under rep index `ri`
-    def runOne(name: String, fn: (SparkSession, String) => DataFrame,
-        ri: Int): Unit = {
-      val c0 = cpuNow()
-      val (u0, s0) = procUserSys()
-      val t0 = System.nanoTime()
-      val ok =
+    // one measured run of one query (construction included), printed as it
+    // completes; None when it failed
+    def sample(name: String, fn: (SparkSession, String) => DataFrame,
+        rdd: Boolean, rep: String): Option[Profile] = {
+      val profile =
         try {
-          val df = fn(spark, sfDir)
-          if (rddMode) df.queryExecution.toRdd.count() else df.count()
-          true
-        }
-        catch {
+          val (rows, p) = QueryProfile.measure(spark) {
+            val df = fn(spark, sfDir)
+            if (rdd) df.queryExecution.toRdd.count() else df.count()
+          }
+          System.err.println(f"[bench] $name rep $rep: ${p.wallSec}%.3f s, " +
+            f"${p.cpuSec}%.3f s CPU, $rows rows")
+          Some(p)
+        } catch {
           case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            false
+            System.err.println(s"[bench] $name rep $rep FAILED: ${e.getMessage}")
+            None
         }
-      // a failed rep records -1, never a plausible-looking duration
-      val t = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      val c = if (ok) (cpuNow() - c0) / 1e9 else -1.0
-      val (u1, s1) = if (ok) procUserSys() else (-1.0, -1.0)
-      times(name) = times.getOrElse(name, Vector.empty) :+ t
-      cpus_(name) = cpus_.getOrElse(name, Vector.empty) :+ c
-      val du = if (ok && u0 >= 0 && u1 >= 0) u1 - u0 else -1.0
-      val ds = if (ok && s0 >= 0 && s1 >= 0) s1 - s0 else -1.0
-      usrs(name) = usrs.getOrElse(name, Vector.empty) :+ du
-      syss(name) = syss.getOrElse(name, Vector.empty) :+ ds
-      repOf(name) = repOf.getOrElse(name, Vector.empty) :+ (ri + 1)
-      if (du >= 0) repUsrTot(ri) += du
-      if (ds >= 0) repSysTot(ri) += ds
-      if (ok) repSamples(ri) += 1
-      sinceProbe += 1
-      if (sinceProbe >= midProbeEvery) {
-        sinceProbe = 0
-        val p = probeFaultMbps(128)
-        if (p >= 0 && p < repMinProbe(ri)) repMinProbe(ri) = p
-      }
       // outside the timed window: this query's Eager.cached relations
       // must not ride into (or slow down) the next query's heap
       spark.catalog.clearCache()
+      profile
+    }
+    // one sample appended under rep entry `ri`
+    def runOne(name: String, fn: (SparkSession, String) => DataFrame,
+        ri: Int): Unit = {
+      val r = repLog(ri)
+      val p = sample(name, fn, rddMode, (ri + 1).toString)
+      samples(name) :+= Sample(ri, p)
+      p.foreach { p =>
+        if (p.userSec >= 0) r.usr += p.userSec
+        if (p.sysSec >= 0) r.sys += p.sysSec
+        r.samples += 1
+      }
+      sinceProbe += 1
+      if (sinceProbe >= midProbeEvery) {
+        sinceProbe = 0
+        val probe = probeFaultMbps(128)
+        if (probe >= 0 && probe < r.minProbe) r.minProbe = probe
+      }
     }
     var rep = 1
     var outOfBudget = false
@@ -384,13 +370,7 @@ object Bench {
               f"[bench] HARD CAP ${hardCapSec}%.0f s exhausted after " +
                 f"$elapsedSec%.0f s in rep $rep; skipping remaining queries")
           }
-          if (rep == 1) {
-            times(name) = times.getOrElse(name, Vector.empty) :+ -1.0
-            cpus_(name) = cpus_.getOrElse(name, Vector.empty) :+ -1.0
-            usrs(name) = usrs.getOrElse(name, Vector.empty) :+ -1.0
-            syss(name) = syss.getOrElse(name, Vector.empty) :+ -1.0
-            repOf(name) = repOf.getOrElse(name, Vector.empty) :+ rep
-          }
+          if (rep == 1) samples(name) :+= Sample(ri, None)
         } else if (rep == 1 || elapsedSec < budgetSec) {
           runOne(name, fn, ri)
         } else if (!outOfBudget) {
@@ -400,7 +380,7 @@ object Bench {
               s"in rep $rep; reporting medians over completed reps")
         }
       }
-      repStorm += stormStampOf(ri)
+      repLog(ri).storm = stormStamp(repLog(ri))
       rep += 1
     }
     // LOWER median: with an even rep count the plain upper-median reports
@@ -418,39 +398,29 @@ object Bench {
     // is tainted when its own whole-process sys time rivals usr time — the
     // same 0.5 regime cut as the rep stamp, floored at 0.2 s usr so the
     // 10 ms USER_HZ resolution of /proc can't flag sub-second queries.
-    def sampleStorm(du: Double, ds: Double): Boolean =
-      du >= 0.2 && ds >= 0.5 * du
-    // Sample selection per query, one index set applied to every metric
-    // map: valid → prefer samples from clean reps → within those, prefer
-    // samples whose own sys/usr window is clean. Medians AND spreads are
-    // computed over the selected set, so one storm-hit outlier neither
-    // shifts the median nor inflates the published spread once a clean
-    // sample exists.
-    def selectedIdx(name: String): Vector[Int] = {
-      val ts = times.getOrElse(name, Vector.empty)
-      val rs = repOf.getOrElse(name, Vector.empty)
-      val us = usrs.getOrElse(name, Vector.empty)
-      val ss = syss.getOrElse(name, Vector.empty)
-      val valid = ts.indices.filter(i => ts(i) >= 0).toVector
-      val repClean = valid.filter(i => !repStorm(rs(i) - 1))
+    def sampleStorm(p: Profile): Boolean =
+      p.userSec >= 0.2 && p.sysSec >= 0.5 * p.userSec
+    // Sample selection per query, applied to every metric: valid → prefer
+    // samples from clean reps → within those, prefer samples whose own
+    // sys/usr window is clean. Medians AND spreads are computed over the
+    // selected set, so one storm-hit outlier neither shifts the median nor
+    // inflates the published spread once a clean sample exists.
+    def selected(name: String): Vector[(Rep, Profile)] = {
+      val valid = samples(name).collect { case Sample(ri, Some(p)) => (repLog(ri), p) }
+      val repClean = valid.filterNot(_._1.storm)
       val base = if (repClean.nonEmpty) repClean else valid
-      val clean = base.filterNot(i => sampleStorm(us(i), ss(i)))
+      val clean = base.filterNot(s => sampleStorm(s._2))
       if (clean.nonEmpty) clean else base
     }
     // true when the published median is still backed by tainted samples
     // (no clean sample existed to prefer) — the per-query analogue of
     // rep_storm, emitted as the query_storm map
     def queryStorm(name: String): Boolean = {
-      val rs = repOf.getOrElse(name, Vector.empty)
-      val us = usrs.getOrElse(name, Vector.empty)
-      val ss = syss.getOrElse(name, Vector.empty)
-      val sel = selectedIdx(name)
-      sel.isEmpty ||
-        sel.exists(i => repStorm(rs(i) - 1) || sampleStorm(us(i), ss(i)))
+      val sel = selected(name)
+      sel.isEmpty || sel.exists { case (r, p) => r.storm || sampleStorm(p) }
     }
-    def medOf(m: scala.collection.Map[String, Vector[Double]], name: String): Double = {
-      val vs = m.getOrElse(name, Vector.empty)
-      val ok = selectedIdx(name).map(vs).filter(_ >= 0)
+    def medOf(sel: Seq[Profile])(f: Profile => Double): Double = {
+      val ok = sel.map(f).filter(_ >= 0)
       if (ok.isEmpty) -1.0 else median(ok)
     }
     // Targeted re-acquisition (round-12 verdict #1): queries whose median
@@ -463,16 +433,14 @@ object Bench {
     // scheduler jitter, not storms).
     def flaggedQueries(): Seq[(String, (SparkSession, String) => DataFrame)] =
       names.filter { case (name, _) =>
-        val ts = times.getOrElse(name, Vector.empty)
-        val sel = selectedIdx(name).map(ts).filter(_ >= 0)
+        val sel = selected(name).map(_._2.wallSec)
         sel.nonEmpty && {
           val med = median(sel)
           queryStorm(name) ||
             (med >= 0.3 && sel.max - sel.min > 0.75 * med)
         }
       }
-    val rerunPassesMax = sys.env.get("SPARK_GRAFT_RERUN_PASSES")
-      .flatMap(_.toIntOption).getOrElse(2)
+    val rerunPassesMax = 2
     var rerunPasses = 0
     if (reps > 1 && !outOfBudget) {
       var flagged = flaggedQueries()
@@ -488,7 +456,7 @@ object Bench {
           if (elapsedSec < budgetSec && elapsedSec < hardCapSec)
             runOne(name, fn, ri)
         }
-        repStorm += stormStampOf(ri)
+        repLog(ri).storm = stormStamp(repLog(ri))
         rerunPasses += 1
         flagged = flaggedQueries()
       }
@@ -498,23 +466,26 @@ object Bench {
       System.err.println(
         s"[bench] WARNING: only $cleanReps clean rep(s) back this artifact " +
           s"(storm-gating + budget exhausted); headline may carry cold-rep cost")
-    case class R(name: String, wall: Double, spread: Double,
-        cpu: Double, usr: Double, sysT: Double, storm: Boolean)
+    // per query: the medians over its selected samples, and the profile of
+    // the sample whose wall time is the median
+    case class R(name: String, wall: Double, spread: Double, cpu: Double,
+        usr: Double, sysT: Double, storm: Boolean, profile: Option[Profile])
     val results = names.map { case (name, _) =>
-      val ts = times.getOrElse(name, Vector.empty)
-      val ok = selectedIdx(name).map(ts).filter(_ >= 0)
-      if (ok.isEmpty) R(name, -1.0, -1.0, -1.0, -1.0, -1.0, storm = true)
-      else R(name, median(ok), ok.max - ok.min,
-        medOf(cpus_, name), medOf(usrs, name), medOf(syss, name),
-        queryStorm(name))
+      val sel = selected(name).map(_._2)
+      if (sel.isEmpty) R(name, -1.0, -1.0, -1.0, -1.0, -1.0, storm = true, None)
+      else {
+        val walls = sel.map(_.wallSec)
+        val wall = median(walls)
+        R(name, wall, walls.max - walls.min, medOf(sel)(_.cpuSec),
+          medOf(sel)(_.userSec), medOf(sel)(_.sysSec), queryStorm(name),
+          sel.find(_.wallSec == wall))
+      }
     }
-    def jmap(f: R => Double): String =
-      results.map(r => "\"" + r.name + "\":" + f(r)).mkString("{", ",", "}")
-    val qs = jmap(_.wall)
-    val spreads = jmap(_.spread)
-    val cpuMap = jmap(_.cpu)
-    val usrMap = jmap(_.usr)
-    val sysMap = jmap(_.sysT)
+    def jmap[V](rs: Seq[(String, V)]): String =
+      rs.map { case (n, v) => "\"" + n + "\":" + v }.mkString("{", ",", "}")
+    def rmap[V](f: R => V): String = jmap(results.map(r => r.name -> f(r)))
+    def totalOf(xs: Seq[Double]): Double =
+      if (xs.exists(_ >= 0)) xs.filter(_ >= 0).sum else -1.0
     val total = results.map(_.wall).filter(_ >= 0).sum
     // cpus in the artifact: executor-thread count changes per-task
     // framework CPU materially (a width-4 run is NOT comparable to a
@@ -525,23 +496,28 @@ object Bench {
     // equal width AND equal heap (a 32g pre-touched heap flips this box
     // into its reclaim storm; 12g does not — the round-9 finding)
     val heapGb = Runtime.getRuntime.maxMemory().toDouble / (1L << 30)
-    val repProbeJson = repProbe.map(p => f"$p%.1f").mkString("[", ",", "]")
-    val repMinProbeJson = repMinProbe.map(p => f"$p%.1f").mkString("[", ",", "]")
-    val repStormJson = repStorm.mkString("[", ",", "]")
-    val repSysUsrJson = repProbe.indices.map(i =>
-      if (repUsrTot(i) > 0) f"${repSysTot(i) / repUsrTot(i)}%.2f" else "-1")
-      .mkString("[", ",", "]")
-    val repSamplesJson = repSamples.mkString("[", ",", "]")
-    val queryStormJson = results
-      .map(r => "\"" + r.name + "\":" + r.storm).mkString("{", ",", "}")
+    val repProbeJson = repLog.map(r => f"${r.probe}%.1f").mkString("[", ",", "]")
+    val repMinProbeJson = repLog.map(r => f"${r.minProbe}%.1f").mkString("[", ",", "]")
+    val repStormJson = repLog.map(_.storm).mkString("[", ",", "]")
+    val repSysUsrJson = repLog.map(r =>
+      if (r.usr > 0) f"${r.sys / r.usr}%.2f" else "-1").mkString("[", ",", "]")
+    val repSamplesJson = repLog.map(_.samples).mkString("[", ",", "]")
     // reps_run = actual entries in every rep_* array (configured reps +
     // adaptive extras + rerun passes) — round-12 advice: a consumer
     // indexing the arrays by the configured "reps" field would misread
     // an adaptively-grown run
-    val repsRun = repStorm.size
+    val repsRun = repLog.size
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
-    def buildJson(rddQs: String, totalRdd: Double, rddStorm: String): String =
-      f"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"reps_run":$repsRun,"rerun_passes":$rerunPasses,"clean_reps":$cleanReps,"timing_mode":"$timingMode","cpus":$cpus,"heap_gb":$heapGb%.1f,"pretouch_mbps":$pretouchMbps%.1f,"rep_probe_mbps":$repProbeJson,"rep_min_probe_mbps":$repMinProbeJson,"rep_sys_usr":$repSysUsrJson,"rep_storm":$repStormJson,"rep_samples":$repSamplesJson,"query_storm":$queryStormJson,"queries_rdd":$rddQs,"total_rdd_s":$totalRdd,"rdd_pass_storm":$rddStorm,"spread":$spreads,"cpu":$cpuMap,"usr":$usrMap,"sys":$sysMap}"""
+    // per query, the sample the wall median selected: its work and the 3
+    // stages with the most executor CPU (which stage eats the time)
+    val profileJson = rmap(_.profile.fold("null") { p =>
+      val top = p.stageRecords.sortBy(-_.cpuSec).take(3).map(s =>
+        f"""{"name":${Mapper.writeValueAsString(s.name)},"tasks":${s.tasks},"cpu_s":${s.cpuSec}%.3f,"wall_s":${s.wallSec}%.3f}""")
+      f"""{"jobs":${p.jobs},"stages":${p.stages},"tasks":${p.tasks},"shuffle_mb":${p.shuffleWriteMb}%.3f,"spill_mb":${p.spillMb}%.3f,"gc_s":${p.gcSec}%.3f,"top_stages":${top.mkString("[", ",", "]")}}"""
+    })
+    // rdd: (name, wall, cpu) per query of the materializing pass
+    def buildJson(rdd: Seq[(String, Double, Double)], rddStorm: String): String =
+      f"""{"metric":"total","value":$total,"unit":"sec","queries":${rmap(_.wall)},"sf":"$sfDir","reps":$reps,"reps_run":$repsRun,"rerun_passes":$rerunPasses,"clean_reps":$cleanReps,"timing_mode":"$timingMode","cpus":$cpus,"heap_gb":$heapGb%.1f,"pretouch_mbps":$pretouchMbps%.1f,"rep_probe_mbps":$repProbeJson,"rep_min_probe_mbps":$repMinProbeJson,"rep_sys_usr":$repSysUsrJson,"rep_storm":$repStormJson,"rep_samples":$repSamplesJson,"query_storm":${rmap(_.storm)},"queries_rdd":${jmap(rdd.map(q => q._1 -> q._2))},"total_rdd_s":${totalOf(rdd.map(_._2))},"rdd_pass_storm":$rddStorm,"cpu_rdd":${jmap(rdd.map(q => q._1 -> q._3))},"total_cpu_rdd_s":${totalOf(rdd.map(_._3))},"spread":${rmap(_.spread)},"cpu":${rmap(_.cpu)},"usr":${rmap(_.usr)},"sys":${rmap(_.sysT)},"profile":$profileJson}"""
     // Artifact durability (two rounds of perf evidence were lost to stdout
     // interleaving / DNF): write the full JSON to a well-known file FIRST,
     // then print a marker-prefixed copy (grep-recoverable even if the tail
@@ -556,50 +532,36 @@ object Bench {
       }
     // count-mode artifact lands on disk BEFORE the rdd pass starts: a
     // SIGTERM mid-pass leaves a valid (rdd-less) artifact, never nothing
-    writeArtifact(buildJson("{}", -1.0, "null"))
+    writeArtifact(buildJson(Nil, "null"))
     // Dual-mode artifact (round-12 verdict #7): one budget-boxed rdd-mode
-    // pass after the count reps, published as queries_rdd/total_rdd_s in
-    // the SAME artifact — count stays the contract headline, but a plan
-    // that collapses under count() (column pruning to a scan-count, as-of
-    // elimination) can no longer flatter the graded file unnoticed. In
-    // rdd timing mode the main loop already measured the materializing
-    // plans, so the rdd fields just mirror the headline maps.
-    val timesRdd = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    var rddPassStorm = "null"
-    if (rddMode) {
-      results.foreach(r => timesRdd(r.name) = r.wall)
-      rddPassStorm = repStormJson
-    } else if (sys.env.getOrElse("SPARK_GRAFT_RDD_PASS", "1") != "0" &&
-        !outOfBudget && elapsedSec < budgetSec) {
-      System.err.println(
-        f"[bench] rdd-mode pass starting at $elapsedSec%.0f s of $budgetSec%.0f")
-      val probe = probeFaultMbps()
-      val (u0, s0) = procUserSys()
-      names.foreach { case (name, fn) =>
-        if (elapsedSec < budgetSec && elapsedSec < hardCapSec) {
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
-            catch {
-              case e: Throwable =>
-                System.err.println(s"[bench] rdd $name FAILED: ${e.getMessage}")
-                false
-            }
-          timesRdd(name) = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-          spark.catalog.clearCache()
-        } else timesRdd(name) = -1.0
-      }
-      val (u1, s1) = procUserSys()
-      val stormy = (probe >= 0 && probe < stormFloorMbps) ||
-        (u1 - u0 > 0 && s1 - s0 >= 0.5 * (u1 - u0))
-      rddPassStorm = stormy.toString
-    }
-    val rddQsJson =
-      timesRdd.map { case (n, t) => "\"" + n + "\":" + t }.mkString("{", ",", "}")
-    val totalRdd =
-      if (timesRdd.values.exists(_ >= 0)) timesRdd.values.filter(_ >= 0).sum
-      else -1.0
-    val json = buildJson(rddQsJson, totalRdd, rddPassStorm)
+    // pass after the count reps, published as queries_rdd/cpu_rdd in the
+    // SAME artifact — count stays the contract headline, but a plan that
+    // collapses under count() (column pruning to a scan-count, as-of
+    // elimination) can no longer flatter the graded file unnoticed. In rdd
+    // timing mode the main loop already measured the materializing plans,
+    // so the rdd fields just mirror the headline maps.
+    val (rdd, rddPassStorm) =
+      if (rddMode) (results.map(r => (r.name, r.wall, r.cpu)), repStormJson)
+      else if (!outOfBudget && elapsedSec < budgetSec) {
+        System.err.println(
+          f"[bench] rdd-mode pass starting at $elapsedSec%.0f s of $budgetSec%.0f")
+        val probe = probeFaultMbps()
+        val (u0, s0) = QueryProfile.procUserSys()
+        val pass = names.map { case (name, fn) =>
+          val p =
+            if (elapsedSec < budgetSec && elapsedSec < hardCapSec)
+              sample(name, fn, rdd = true, "rdd")
+            else None
+          (name, p.fold(-1.0)(_.wallSec), p.fold(-1.0)(_.cpuSec))
+        }
+        val (u1, s1) = QueryProfile.procUserSys()
+        val stormy = (probe >= 0 && probe < stormFloorMbps) ||
+          (u1 - u0 > 0 && s1 - s0 >= 0.5 * (u1 - u0))
+        (pass, stormy.toString)
+      } else (Nil, "null")
+    val totalRdd = totalOf(rdd.map(_._2))
+    val totalCpuRdd = totalOf(rdd.map(_._3))
+    val json = buildJson(rdd, rddPassStorm)
     writeArtifact(json)
     // Terminal stdout lines (see terminalLines scaladoc). Round-10 forensics:
     // the driver's captured tail ended EXACTLY at the `GRAFT_BENCH_SUMMARY
@@ -612,9 +574,9 @@ object Bench {
     // stop still matches; json.loads of the whole line now succeeds).
     val failed = results.count(_.wall < 0)
     val compact = compactLine(total, sfDir, reps, repsRun, cleanReps,
-      results.size, failed, heapGb, repStormJson, totalRdd, outFile)
+      results.size, failed, heapGb, repStormJson, totalRdd, totalCpuRdd, outFile)
     val summary = summaryLine(total, sfDir, reps, repsRun, cleanReps,
-      results.size, failed, totalRdd, outFile)
+      results.size, failed, totalRdd, totalCpuRdd, outFile)
     terminalLines(json, compact, summary).foreach(println)
     Console.out.flush()
     System.err.println(s"GRAFT_BENCH_JSON $json")
@@ -647,12 +609,14 @@ object Bench {
     * how many non-storm reps back the medians (round-11 verdict #2: a
     * graded headline must never be a single cold rep without saying so);
     * reps_run says how many rep entries the artifact's arrays actually
-    * carry (configured + adaptive extras + rerun passes); total_rdd_s is
-    * the materializing-mode census total (-1 when the pass didn't run). */
+    * carry (configured + adaptive extras + rerun passes); total_rdd_s and
+    * total_cpu_rdd_s are the materializing-mode census's wall and summed
+    * executor CPU (-1 when the pass didn't run). */
   def compactLine(total: Double, sfDir: String, reps: Int, repsRun: Int,
       cleanReps: Int, n: Int, failed: Int, heapGb: Double,
-      repStormJson: String, totalRdd: Double, outFile: String): String =
-    f"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","reps":$reps,"reps_run":$repsRun,"clean_reps":$cleanReps,"n":$n,"failed":$failed,"heap_gb":$heapGb%.1f,"rep_storm":$repStormJson,"total_rdd_s":$totalRdd,"file":"$outFile"}"""
+      repStormJson: String, totalRdd: Double, totalCpuRdd: Double,
+      outFile: String): String =
+    f"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","reps":$reps,"reps_run":$repsRun,"clean_reps":$cleanReps,"n":$n,"failed":$failed,"heap_gb":$heapGb%.1f,"rep_storm":$repStormJson,"total_rdd_s":$totalRdd,"total_cpu_rdd_s":$totalCpuRdd,"file":"$outFile"}"""
 
   /** Summary marker line: PURE JSON (bare json.loads succeeds) whose
     * "marker" field carries the literal GRAFT_BENCH_SUMMARY string so a
@@ -662,6 +626,6 @@ object Bench {
     */
   def summaryLine(total: Double, sfDir: String, reps: Int, repsRun: Int,
       cleanReps: Int, n: Int, failed: Int, totalRdd: Double,
-      outFile: String): String =
-    f"""{"marker":"GRAFT_BENCH_SUMMARY","metric":"total","value":$total,"unit":"sec","n":$n,"failed":$failed,"total_s":$total%.1f,"sf":"$sfDir","reps":$reps,"reps_run":$repsRun,"clean_reps":$cleanReps,"total_rdd_s":$totalRdd,"file":"$outFile"}"""
+      totalCpuRdd: Double, outFile: String): String =
+    f"""{"marker":"GRAFT_BENCH_SUMMARY","metric":"total","value":$total,"unit":"sec","n":$n,"failed":$failed,"total_s":$total%.1f,"sf":"$sfDir","reps":$reps,"reps_run":$repsRun,"clean_reps":$cleanReps,"total_rdd_s":$totalRdd,"total_cpu_rdd_s":$totalCpuRdd,"file":"$outFile"}"""
 }

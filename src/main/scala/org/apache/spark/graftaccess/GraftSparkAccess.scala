@@ -4,8 +4,8 @@ import org.apache.spark.SparkContext
 
 /** Narrow bridge into one `private[spark]` member.
   *
-  * Bench measures per-query executor CPU time with a `SparkListener` summing
-  * `TaskMetrics.executorCpuTime`, but listener-bus delivery is asynchronous:
+  * `graft.util.QueryProfile` measures a query with a `SparkListener` summing
+  * `TaskMetrics`, but listener-bus delivery is asynchronous:
   * after an action returns, its task-end events may still be in flight. The
   * only deterministic fence is `LiveListenerBus.waitUntilEmpty()`, which is
   * `private[spark]` — so this one-method object lives in an `org.apache.spark`

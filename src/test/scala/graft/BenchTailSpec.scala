@@ -22,8 +22,8 @@ class BenchTailSpec extends AnyFunSuite {
     catch { case _: Throwable => false }
 
   // a realistic full contract line: 206 queries of the shape the real
-  // jmap() produces (unrounded doubles), plus the round-13 dual-mode and
-  // per-query-storm fields — ~25 KB, so the tail-window tests exercise
+  // jmap() produces (unrounded doubles), plus the dual-mode, per-query-storm
+  // and per-query profile fields, so the tail-window tests exercise
   // the real line sizes (round-12 advice: the fixture had drifted behind
   // the production fields)
   private val queries = (1 to 206)
@@ -32,15 +32,24 @@ class BenchTailSpec extends AnyFunSuite {
   private val queriesRdd = (1 to 206)
     .map(i => "\"q%03d_name\":%.16f".format(i, i * 0.0411111111))
     .mkString("{", ",", "}")
+  private val cpuRdd = (1 to 206)
+    .map(i => "\"q%03d_name\":%.16f".format(i, i * 0.0622222222))
+    .mkString("{", ",", "}")
+  private val profile = (1 to 206)
+    .map(i => ("\"q%03d_name\":{\"jobs\":%d,\"stages\":%d,\"tasks\":%d," +
+      "\"shuffle_mb\":%.3f,\"spill_mb\":0.000,\"gc_s\":%.3f,\"top_stages\":" +
+      "[{\"name\":\"count at Bench.scala:160\",\"tasks\":4,\"cpu_s\":%.3f,\"wall_s\":%.3f}]}")
+      .format(i, i % 7 + 1, i % 9 + 2, i % 40 + 5, i * 0.0123, i * 0.0011, i * 0.031, i * 0.012))
+    .mkString("{", ",", "}")
   private val queryStorm = (1 to 206)
     .map(i => "\"q%03d_name\":%s".format(i, (i % 37 == 0).toString))
     .mkString("{", ",", "}")
   private val fullJson =
-    s"""{"metric":"total","value":202.45,"unit":"sec","queries":$queries,"sf":"/root/testdata/sf0.1","reps":3,"reps_run":4,"rerun_passes":1,"clean_reps":2,"timing_mode":"count","cpus":32,"heap_gb":12.0,"pretouch_mbps":1674.0,"rep_probe_mbps":[1500.0,1400.0,90.0,1600.0],"rep_min_probe_mbps":[1300.0,1200.0,80.0,1500.0],"rep_sys_usr":[0.25,0.30,1.64,0.21],"rep_storm":[false,false,true,false],"rep_samples":[206,206,206,3],"query_storm":$queryStorm,"queries_rdd":$queriesRdd,"total_rdd_s":251.2,"rdd_pass_storm":false,"spread":{},"cpu":{},"usr":{},"sys":{}}"""
+    s"""{"metric":"total","value":202.45,"unit":"sec","queries":$queries,"sf":"testdata/sf0.1","reps":3,"reps_run":4,"rerun_passes":1,"clean_reps":2,"timing_mode":"count","cpus":32,"heap_gb":12.0,"pretouch_mbps":1674.0,"rep_probe_mbps":[1500.0,1400.0,90.0,1600.0],"rep_min_probe_mbps":[1300.0,1200.0,80.0,1500.0],"rep_sys_usr":[0.25,0.30,1.64,0.21],"rep_storm":[false,false,true,false],"rep_samples":[206,206,206,3],"query_storm":$queryStorm,"queries_rdd":$queriesRdd,"total_rdd_s":251.2,"rdd_pass_storm":false,"cpu_rdd":$cpuRdd,"total_cpu_rdd_s":461.3,"spread":{},"cpu":{},"usr":{},"sys":{},"profile":$profile}"""
   private val compact = Bench.compactLine(202.45, "/root/testdata/sf0.1", 3,
-    4, 2, 206, 0, 12.04, "[false,false,true,false]", 251.2, "BENCH.json")
+    4, 2, 206, 0, 12.04, "[false,false,true,false]", 251.2, 461.3, "BENCH.json")
   private val summary = Bench.summaryLine(202.45, "/root/testdata/sf0.1", 3,
-    4, 2, 206, 0, 251.2, "BENCH.json")
+    4, 2, 206, 0, 251.2, 461.3, "BENCH.json")
   private val lines = Bench.terminalLines(fullJson, compact, summary)
   private val stdout = lines.mkString("", "\n", "\n")
 
@@ -105,12 +114,14 @@ class BenchTailSpec extends AnyFunSuite {
   test("both driver-parseable lines carry reps_run and total_rdd_s") {
     // round-12 advice: array lengths are reps_run, not the configured
     // reps; round-12 verdict #7: the materializing-mode total rides the
-    // same artifact so count-collapse can't flatter the graded number
+    // same artifact so count-collapse can't flatter the graded number,
+    // and so does its summed executor CPU
     for (line <- Seq(summary, compact)) {
       val node = mapper.readTree(line)
       assert(node.get("reps").asInt() == 3)
       assert(node.get("reps_run").asInt() == 4)
       assert(node.get("total_rdd_s").asDouble() == 251.2)
+      assert(node.get("total_cpu_rdd_s").asDouble() == 461.3)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.util.{Profile, QueryProfile}
 
 /** Wall-clock regression tripwires for the historically slowest gated
   * queries (round-3 bench at sf0.1/local[32]: t14 9.0 s, c02 8.5 s,
@@ -19,17 +20,19 @@ class BudgetSpec extends AnyFunSuite with SparkSpec {
 
   private val sfGate = "/root/testdata/sf0.01"
 
-  private def seconds(name: String): Double = {
-    val df = graft.SparkEntry.queries(name)(spark, sfGate)
-    val t0 = System.nanoTime()
-    df.collect()
+  /** Builds and collects `name` in one window, as Bench measures a query:
+    * building runs every `Eager.cached` build and every loop round. */
+  private def profile(name: String): Profile = {
+    val (_, p) = QueryProfile.measure(spark) {
+      graft.SparkEntry.queries(name)(spark, sfGate).collect()
+    }
     spark.catalog.clearCache() // same hygiene as Bench: no cross-query piling
-    (System.nanoTime() - t0) / 1e9
+    p
   }
 
   private def budget(name: String, ceilingSec: Double): Unit =
     test(s"$name stays under ${ceilingSec}s at sf0.01 (3x warm median)") {
-      val t = seconds(name)
+      val t = profile(name).wallSec
       info(f"$name: $t%.2f s (ceiling ${ceilingSec}s)")
       assert(t < ceilingSec, f"$name took $t%.2f s — plan regression? " +
         "Check .explain for a lost broadcast / new exchange before raising this.")
@@ -64,25 +67,9 @@ class BudgetSpec extends AnyFunSuite with SparkSpec {
   // BOTH runs. Ceilings are ~4x the measured warm sf0.01 medians
   // (d10 1.9 s, pr01 3.4 s, st06 1.0 s, st10 1.3 s, st11 0.8 s).
 
-  private lazy val cpuListener = {
-    val l = new graft.util.CpuTimeListener
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
-
-  private def cpuSeconds(name: String): Double = {
-    val df = graft.SparkEntry.queries(name)(spark, sfGate)
-    org.apache.spark.graftaccess.GraftSparkAccess.drainListenerBus(spark.sparkContext)
-    val c0 = cpuListener.totalNanos
-    df.collect()
-    spark.catalog.clearCache()
-    org.apache.spark.graftaccess.GraftSparkAccess.drainListenerBus(spark.sparkContext)
-    (cpuListener.totalNanos - c0) / 1e9
-  }
-
   private def cpuBudget(name: String, ceilingSec: Double): Unit =
     test(s"$name stays under ${ceilingSec}s executor CPU at sf0.01 (~4x warm median)") {
-      val c = math.min(cpuSeconds(name), cpuSeconds(name))
+      val c = math.min(profile(name).cpuSec, profile(name).cpuSec)
       info(f"$name: $c%.2f s CPU min-of-2 (ceiling ${ceilingSec}s)")
       assert(c < ceilingSec, f"$name burned $c%.2f s executor CPU on BOTH runs — " +
         "a real work regression. Check .explain before raising this.")

@@ -68,22 +68,8 @@ class ServeSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
     graft.Warehouse.jsonRecords(df).collect().mkString("[", ",", "]")
 
   /** Count Spark jobs started while `body` runs (listener-bus drained). */
-  private def sparkJobs(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.graftaccess.GraftSparkAccess
-        .drainListenerBus(spark.sparkContext)
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def sparkJobs(body: => Unit): Int =
+    graft.util.QueryProfile.measure(spark)(body)._2.jobs
 
   test("health probe answers like the reference's /health") {
     assert(get("/health") == (200, """{"status":"running"}"""))

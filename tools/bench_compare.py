@@ -4,6 +4,11 @@ mechanized): refuses to compare artifacts whose `cpus` or `heap_gb`
 differ or whose reps are storm-stamped, then reports total/median ratios
 and every per-query regression above the threshold.
 
+When both artifacts carry a per-query `profile`, it also lists the queries
+whose `jobs` or `stages` changed, and flags `cpu` and `cpu_rdd` ratios
+above the threshold like wall-time ones. Artifacts without `profile` are
+compared on wall time only.
+
 Usage: python3 tools/bench_compare.py OLD.json NEW.json [--threshold 2.0]
 
 Exit code 1 if any query regressed beyond the threshold (tripwire use),
@@ -68,15 +73,35 @@ def main(argv):
         print(f"new-only queries ({len(only_new)}): "
               + ", ".join(f"{k}={qn[k]:.2f}s" for k in only_new))
 
+    regressed = report("", qo, qn, thr)
+    po, pn = old.get("profile"), new.get("profile")
+    if isinstance(po, dict) and isinstance(pn, dict):
+        changed = [(k, po[k], pn[k]) for k in sorted(po)
+                   if isinstance(po[k], dict) and isinstance(pn.get(k), dict)
+                   and any(po[k].get(f) != pn[k].get(f) for f in ("jobs", "stages"))]
+        if changed:
+            print(f"jobs/stages changed ({len(changed)}):")
+            for k, a, b in changed:
+                print(f"  {k}: jobs {a.get('jobs')} -> {b.get('jobs')}, "
+                      f"stages {a.get('stages')} -> {b.get('stages')}")
+        for field in ("cpu", "cpu_rdd"):
+            regressed |= report(f"{field} ", old.get(field) or {},
+                                new.get(field) or {}, thr)
+    return 1 if regressed else 0
+
+
+def report(label, qo, qn, thr):
+    """Prints the queries whose `label` value grew beyond `thr`x; True if any."""
+    ratios = {k: qn[k] / qo[k] for k in qo if k in qn and qo[k] > 0 and qn[k] > 0}
     regressions = sorted(
         ((r, k) for k, r in ratios.items() if r > thr), reverse=True)
     if regressions:
-        print(f"REGRESSIONS above {thr}x:")
+        print(f"{label.upper()}REGRESSIONS above {thr}x:")
         for r, k in regressions:
             print(f"  {k}: {qo[k]:.2f}s -> {qn[k]:.2f}s ({r:.2f}x)")
-        return 1
-    print(f"no query regressed beyond {thr}x")
-    return 0
+        return True
+    print(f"no query {label}regressed beyond {thr}x")
+    return False
 
 
 if __name__ == "__main__":
